@@ -419,7 +419,8 @@ DISK_ROWS = ("x3_ann_ivf_reseed_ride", "x3_ann_ivf_append_ride")
 
 def _io_probe() -> float:
     """Best-of-3 time to write + fsync + read back 32 MiB in the bench's
-    scratch space — the co-tenant-IO analogue of ``_calib_probe``.
+    scratch space (``tempfile.gettempdir()``, where the DISK_ROWS index
+    writes go) — the co-tenant-IO analogue of ``_calib_probe``.
     Self-relative across the suite (start vs tail): a tail probe several
     times the start probe means the disk-row swings are machine state,
     not regression. ~0.05-0.2 s nominal on local NVMe."""
@@ -429,7 +430,7 @@ def _io_probe() -> float:
     times = []
     for _ in range(3):
         t0 = time.perf_counter()
-        with tempfile.NamedTemporaryFile(dir="/tmp", delete=False) as f:
+        with tempfile.NamedTemporaryFile(delete=False) as f:
             for _ in range(32):
                 f.write(block)
             f.flush()

@@ -2,7 +2,7 @@
 
 Reproduces ``parseTime`` (reference task.ts:66-76) and its 18-entry
 abbreviation→IANA map (task.ts:45-64) as a pure Column expression —
-JVM-side, whole-stage-codegen-friendly, no UDF.
+JVM-side, no UDF.
 
 Semantics (pinned by golden tests):
 - trim, split on single spaces; the last token is the tz abbreviation.
@@ -64,6 +64,8 @@ Semantics (pinned by golden tests):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -123,75 +125,100 @@ def _two_digit_year(raw: Column) -> Column:
     ).otherwise(y)
 
 
+def let(x: Column, f: Callable[[Column], Column]) -> Column:
+    """Evaluate ``x`` ONCE and pass its value to ``f`` as a lambda variable:
+    ``element_at(transform(array(x), f), 1)``. Lambda bodies are
+    interpreted with no common-subexpression elimination (CLAUDE.md rule
+    1), and neither are CASE branches — a sub-expression referenced k
+    times there is evaluated k times. Binding it first makes that once."""
+    return F.element_at(F.transform(F.array(x), f), 1)
+
+
+def _groups(s: Column, pat: str, n: int, f: Callable[[Callable[[int], Column]], Column]) -> Column:
+    """Bind ``pat``'s capture groups 1..n of ``s`` once; ``f`` receives
+    ``g(i)``, group i with '' (no match) as NULL. ``nullif(a, b)`` reads
+    ``a`` twice, so it applies to the bound field, never to the extract."""
+    groups = F.struct(*[F.regexp_extract(s, pat, i).alias(f"g{i}") for i in range(1, n + 1)])
+    return let(groups, lambda v: f(lambda i: F.nullif(v[f"g{i}"], F.lit(""))))
+
+
 def _lenient_wall(col: Column, now_year: int | None = None) -> Column:
     """moment-non-strict parse → LOCAL wall clock as TIMESTAMP_NTZ (NULL
     when month/day/year can't be extracted or any component overflows —
     ``try_make_timestamp_ntz`` applies exactly moment's overflow rule).
     ``now_year`` pins moment's missing-year default (module docstring).
 
-    Hot-path note: a strict-format fast path runs first — one parse
-    attempt instead of six regex extractions. When it succeeds the
-    lenient extraction would produce the identical components (an exact
-    'MM/dd/yyyy HH:mm:ss' match IS six separator-delimited digit runs
-    with a 4-digit year — the strict 'yyyy' token never accepts the
-    2-digit shape, so parseTwoDigitYear rows always reach the lenient
-    branch), so only malformed rows — a sliver at 100 TB — pay the regex
-    fan-out. Measured r5, do not "optimize": collapsing the six
-    ``regexp_extract`` calls into ONE ``(?s)^.*?PAT.*$`` regexp_replace
-    emitting all groups + split is ~70% SLOWER (0.53 s vs 0.31 s per
-    200k malformed-heavy rows) — the anchored wrapper backtracks harder
-    than six cached-pattern extracts. ``to_timestamp_ntz`` is guarded
-    behind the try-probe because it throws on malformed input under
-    ANSI mode."""
-    strict_ok = F.try_to_timestamp(col, F.lit(ALERT_TIME_FORMAT)).isNotNull()
-    g = lambda i: F.nullif(F.regexp_extract(col, LENIENT_PAT, i), F.lit(""))  # noqa: E731
-    opt = lambda i: F.coalesce(g(i).cast("int"), F.lit(0))  # noqa: E731
-    lenient = F.try_make_timestamp_ntz(
-        _two_digit_year(g(3)), g(1).cast("int"), g(2).cast("int"), opt(4), opt(5), opt(6)
-    )
-    if now_year is not None:
-        # checked FIRST: on a 2-run input the 6-run pattern would
-        # backtrack-SPLIT the second run into day+year ('02/30' → day 3,
-        # year 0) — moment instead leaves the year token empty and
-        # defaults it, so an MD-shaped string is always the MD parse
-        # (including its overflow NULLs: Feb 30 stays invalid)
-        md = lambda i: F.nullif(F.regexp_extract(col, LENIENT_PAT_MD, i), F.lit(""))  # noqa: E731
-        md_ts = F.try_make_timestamp_ntz(
-            F.lit(int(now_year)),
-            md(1).cast("int"),
-            md(2).cast("int"),
-            F.lit(0),
-            F.lit(0),
-            F.lit(0),
-        )
-        lenient = F.when(md(1).isNotNull(), md_ts).otherwise(lenient)
-    return F.when(strict_ok, F.to_timestamp_ntz(col, F.lit(ALERT_TIME_FORMAT))).otherwise(lenient)
+    Cost note: the input is bound once (``let``), and so are the
+    ``LENIENT_PAT`` groups — one ``regexp_extract`` per group per row.
+    A strict-format fast path runs first — one parse attempt instead of
+    six regex extractions. When it succeeds the lenient extraction would
+    produce the identical components (an exact 'MM/dd/yyyy HH:mm:ss'
+    match IS six separator-delimited digit runs with a 4-digit year — the
+    strict 'yyyy' token never accepts the 2-digit shape, so
+    parseTwoDigitYear rows always reach the lenient branch), so only
+    malformed rows pay the regex extractions. Measured r5: collapsing the
+    six ``regexp_extract`` calls into ONE ``(?s)^.*?PAT.*$``
+    regexp_replace emitting all groups + split is ~70% SLOWER — the
+    anchored wrapper backtracks harder than six cached-pattern extracts.
+    ``to_timestamp_ntz`` is guarded behind the try-probe because it
+    throws on malformed input under ANSI mode."""
+
+    def wall(s: Column) -> Column:
+        def full(g: Callable[[int], Column]) -> Column:
+            opt = lambda i: F.coalesce(g(i).cast("int"), F.lit(0))  # noqa: E731
+            return F.try_make_timestamp_ntz(
+                _two_digit_year(g(3)), g(1).cast("int"), g(2).cast("int"), opt(4), opt(5), opt(6)
+            )
+
+        lenient = _groups(s, LENIENT_PAT, 6, full)
+        if now_year is not None:
+            # checked FIRST: on a 2-run input the 6-run pattern would
+            # backtrack-SPLIT the second run into day+year ('02/30' → day 3,
+            # year 0) — moment instead leaves the year token empty and
+            # defaults it, so an MD-shaped string is always the MD parse
+            # (including its overflow NULLs: Feb 30 stays invalid)
+            def md_or_full(m: Callable[[int], Column]) -> Column:
+                md_ts = F.try_make_timestamp_ntz(
+                    F.lit(int(now_year)), m(1).cast("int"), m(2).cast("int"),
+                    F.lit(0), F.lit(0), F.lit(0),
+                )
+                return F.when(m(1).isNotNull(), md_ts).otherwise(lenient)
+
+            lenient = _groups(s, LENIENT_PAT_MD, 2, md_or_full)
+        fmt = F.lit(ALERT_TIME_FORMAT)
+        strict_ok = F.try_to_timestamp(s, fmt).isNotNull()
+        return F.when(strict_ok, F.to_timestamp_ntz(s, fmt)).otherwise(lenient)
+
+    return let(col, wall)
 
 
-def _split_parts(col: Column) -> tuple[Column, Column, Column]:
-    trimmed = F.trim(col)
-    abbr = F.regexp_extract(trimmed, r"(\S+)$", 1)
-    # Everything before the last space-separated token (task.ts:71).
-    date_part = F.trim(F.regexp_replace(trimmed, r"\s*\S+$", ""))
-    return date_part, abbr, trimmed
+def parse_alert_time_ntz(col: Column, now_year: int | None = None) -> Column:
+    """'MM/DD/YYYY HH:mm:ss ABBR' string → the UTC wall clock as
+    TIMESTAMP_NTZ — fully session-independent representation for
+    oracle-checked queries.
 
+    Dispatch per the reference: a known trailing abbreviation → parse only
+    the string minus that token (task.ts:71) as local wall time in the
+    mapped zone (task.ts:70-73); otherwise parse the WHOLE string in UTC
+    (task.ts:75 — moment's 'z' token is a parse no-op and the lenient
+    parser skips a trailing unknown token as junk anyway). The trimmed
+    input and the zone lookup are each bound once."""
 
-def _wall_and_zone(col: Column, now_year: int | None = None) -> tuple[Column, Column]:
-    """(local wall clock NTZ, IANA zone) per the reference's dispatch:
-    known trailing abbreviation → parse only the string minus that token
-    in the mapped zone (task.ts:70-73); otherwise parse the WHOLE string
-    in UTC (task.ts:75 — moment's 'z' token is a parse no-op and the
-    lenient parser skips a trailing unknown token as junk anyway)."""
-    date_part, abbr, trimmed = _split_parts(col)
-    tz = F.try_element_at(_tz_map_lit(), abbr)
-    wall = F.when(tz.isNotNull(), _lenient_wall(date_part, now_year)).otherwise(
-        _lenient_wall(trimmed, now_year)
-    )
-    return wall, F.coalesce(tz, F.lit("UTC"))
+    def dispatch(s: Column) -> Column:
+        def in_zone(tz: Column) -> Column:
+            date_part = F.trim(F.regexp_replace(s, r"\s*\S+$", ""))
+            return F.when(
+                tz.isNotNull(),
+                F.convert_timezone(tz, F.lit("UTC"), _lenient_wall(date_part, now_year)),
+            ).otherwise(_lenient_wall(s, now_year))
+
+        return let(F.try_element_at(_tz_map_lit(), F.regexp_extract(s, r"(\S+)$", 1)), in_zone)
+
+    return let(F.trim(col), dispatch)
 
 
 def parse_alert_time(col: Column, now_year: int | None = None) -> Column:
-    """'MM/DD/YYYY HH:mm:ss ABBR' string → UTC-instant timestamp Column.
+    """Same parse as ``parse_alert_time_ntz``, as a UTC-instant timestamp.
 
     Session-timezone independence (r7, ADVICE r06): the instant is built
     with ``make_timestamp(fields..., 'UTC')`` from the UTC wall clock's
@@ -208,23 +235,18 @@ def parse_alert_time(col: Column, now_year: int | None = None) -> Column:
     ``now_year`` (optional) pins moment's missing-year default — the year
     of the reference instant 'now' in the input's zone frame.
     """
-    ntz_utc = parse_alert_time_ntz(col, now_year)
-    return F.make_timestamp(
-        F.year(ntz_utc),
-        F.month(ntz_utc),
-        F.dayofmonth(ntz_utc),
-        F.hour(ntz_utc),
-        F.minute(ntz_utc),
-        F.extract(F.lit("SECOND"), ntz_utc),
-        F.lit("UTC"),
+    return let(
+        parse_alert_time_ntz(col, now_year),
+        lambda t: F.make_timestamp(
+            F.year(t),
+            F.month(t),
+            F.dayofmonth(t),
+            F.hour(t),
+            F.minute(t),
+            F.extract(F.lit("SECOND"), t),
+            F.lit("UTC"),
+        ),
     )
-
-
-def parse_alert_time_ntz(col: Column, now_year: int | None = None) -> Column:
-    """Same parse, returning the UTC wall clock as TIMESTAMP_NTZ — fully
-    session-independent representation for oracle-checked queries."""
-    wall, zone = _wall_and_zone(col, now_year)
-    return F.convert_timezone(zone, F.lit("UTC"), wall)
 
 
 def parse_alert_time_iso(col: Column, now_year: int | None = None) -> Column:

@@ -2331,9 +2331,10 @@ def x3_ann_ivf_reseed_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoped_persist round-trip to share them (interleaved A/B at sf0.1:
     3.16 → 2.80 s median-of-7, identical rows at sf0.01+sf0.1; the fold
     also removes the persist, making the plan memo-eligible). The plan
-    tail is windows over the 16-row occupancy table; the per-cell argmin
-    gets map-side WindowGroupLimit (rule 19). Nothing corpus-sized moves
-    to the driver."""
+    tail is windows over the 16-row occupancy table. The per-cell argmin
+    gets NO map-side WindowGroupLimit (rule 19): the same pass computes
+    the full per-cell count, so every member row reaches the window.
+    Nothing corpus-sized moves to the driver."""
     n, _, _, cells1 = _lloyd_step(spread(read_table(spark, sf_dir, "embeddings"), "vec_id"))
     sc2, _, _ = _lloyd_next_scored(n, cells1)
     w_assign = Window.partitionBy("vec_id").orderBy(

@@ -6,9 +6,13 @@ task.ts:214-231). Everything is built-in Column expressions; the only
 shuffle is the response-dedup aggregation (O-19), keyed by alert id.
 
 At 100 TB the per-alert work (coordinate fallback, regex extraction,
-templating) is a single narrow WholeStageCodegen stage; the dedup shuffles
-only (alert_id, callsign, small structs) — not the wide alert rows, which
-are re-joined by id afterwards (broadcast-free sort-merge on the same key).
+templating) is a single narrow stage. The links array and the time parse
+are higher-order lambdas, which run interpreted inside it with no
+common-subexpression elimination, so each shared sub-expression is bound
+once (``timeparse.let``): the per-alert cost is one match and three
+group extracts per response line, plus one time parse per link. The
+explode formulation's dedup shuffles only (alert_id, callsign, small
+structs) — not the wide alert rows, which are re-joined by id afterwards.
 """
 
 from __future__ import annotations
@@ -17,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_active911_spark.functions.timeparse import parse_alert_time
+from etl_active911_spark.functions.timeparse import let, parse_alert_time, parse_alert_time_iso
 
 #: Reference OutputSchema (task.ts:18-43): 24 columns, all strings.
 ALERT_COLUMNS = [
@@ -143,8 +147,6 @@ def extract_responses(alerts: DataFrame, time_as_iso: bool = False) -> DataFrame
     reference's ISO-string form (session-tz-independent) instead of a
     timestamp — used by the oracle-checked flat queries.
     """
-    from etl_active911_spark.functions.timeparse import parse_alert_time_iso
-
     time_fn = parse_alert_time_iso if time_as_iso else parse_alert_time
 
     lines = alerts.select(
@@ -206,20 +208,24 @@ def links_array_native(time_as_iso: bool = False) -> Column:
     (SURVEY.md §7 "semantics-preserving shortcut": ``responses`` never
     leaves its alert row, so dedup can stay inside the row).
 
-    keys = first-occurrence-ordered distinct callsigns (array_distinct
-    preserves first occurrence = Map insertion order, task.ts:187-209);
-    each key's link carries the LAST matching line's fields (last-wins).
-    Arrays are bounded by the response-log length (a few lines), so the
-    interpreted-lambda cost is constant per row — unlike corpus-sized
-    hot paths (see SCALE.md invariant 3).
+    Each 'Got a response of ' line is parsed ONCE into a
+    (key, remarks, time) struct; keys = first-occurrence-ordered distinct
+    callsigns (array_distinct preserves first occurrence = Map insertion
+    order, task.ts:187-209); each key's link carries the LAST struct with
+    that key (last-wins), and only that struct's time is parsed. Lambdas
+    are interpreted without common-subexpression elimination (CLAUDE.md
+    rule 1), so every shared value is bound once with ``let`` — the cost
+    per alert is one match and three group extracts per line, plus one
+    time parse per link.
+    A NULL log yields no links, as in the explode formulation.
     """
     from etl_active911_spark.plans.cache import memo_cols
 
-    # Memoized per flag (r14): this tree embeds a full lenient-parse chain
-    # per link and costs ~0.18 s of py4j round trips to build; it is a
-    # fixed expression over the `responses` column, reusable across plans.
-    # Routed through memo_cols (ADVICE r14 item 2) for applicationId-scoped
-    # invalidation. Built lazily, never at import (CLAUDE.md rule 15).
+    # Memoized per flag (r14): building the tree costs py4j round trips;
+    # it is a fixed expression over the `responses` column, reusable
+    # across plans. Routed through memo_cols (ADVICE r14 item 2) for
+    # applicationId-scoped invalidation. Built lazily, never at import
+    # (CLAUDE.md rule 15).
     return memo_cols(
         f"active911.links_array:{time_as_iso}",
         lambda: _build_links_array(time_as_iso),
@@ -227,33 +233,39 @@ def links_array_native(time_as_iso: bool = False) -> Column:
 
 
 def _build_links_array(time_as_iso: bool) -> Column:
-    from etl_active911_spark.functions.timeparse import parse_alert_time_iso
-
     time_fn = parse_alert_time_iso if time_as_iso else parse_alert_time
 
-    lines = F.filter(
-        F.split(F.col("responses"), "\n"), lambda l: l.startswith(RESPONSE_PREFIX)
-    )
-
-    def key_of(l: Column) -> Column:
-        return F.when(
-            l.rlike(RESPONSE_REGEX), F.trim(F.regexp_extract(l, RESPONSE_REGEX, 2))
-        ).otherwise(F.lit("Unknown"))
-
-    keys = F.array_distinct(F.transform(lines, key_of))
-
-    def link_of(k: Column) -> Column:
-        last_line = F.element_at(F.filter(lines, lambda l: key_of(l) == k), -1)
-        matched = last_line.rlike(RESPONSE_REGEX)
-        g = lambda i: F.regexp_extract(last_line, RESPONSE_REGEX, i)  # noqa: E731
-        return F.struct(
-            F.lit("t-s").alias("relation"),
-            k.alias("callsign"),
-            F.when(matched, F.trim(g(1))).otherwise(F.lit("Unknown")).alias("remarks"),
-            F.when(matched, time_fn(F.trim(g(4)))).alias("production_time"),
+    def parse_line(l: Column) -> Column:
+        g = lambda i: F.trim(F.regexp_extract(l, RESPONSE_REGEX, i))  # noqa: E731
+        return let(
+            l.rlike(RESPONSE_REGEX),
+            lambda m: F.struct(
+                F.when(m, g(2)).otherwise(F.lit("Unknown")).alias("key"),
+                F.when(m, g(1)).otherwise(F.lit("Unknown")).alias("remarks"),
+                F.when(m, g(4)).alias("time"),
+            ),
         )
 
-    return F.transform(keys, link_of)
+    def links_of(parsed: Column) -> Column:
+        def link_of(k: Column) -> Column:
+            last = F.element_at(F.filter(parsed, lambda p: p["key"] == k), -1)
+            return let(
+                last,
+                lambda p: F.struct(
+                    F.lit("t-s").alias("relation"),
+                    k.alias("callsign"),
+                    p["remarks"].alias("remarks"),
+                    time_fn(p["time"]).alias("production_time"),
+                ),
+            )
+
+        return F.transform(F.array_distinct(F.transform(parsed, lambda p: p["key"])), link_of)
+
+    lines = F.filter(
+        F.split(F.coalesce(F.col("responses"), F.lit("")), "\n"),
+        lambda l: l.startswith(RESPONSE_PREFIX),
+    )
+    return let(F.transform(lines, parse_line), links_of)
 
 
 def alert_remarks() -> Column:

@@ -327,3 +327,111 @@ def test_feature_shape_and_remarks_whitespace(spark):
     )
     assert f["properties"]["remarks"] == expected_remarks  # task.ts:221-226
     assert f["geometry"]["type"] == "Point"
+
+
+# --- hostile response logs: array-native == explode == goldens ------------
+
+# (responses, expected links as (callsign, remarks, ISO production_time))
+HOSTILE_LOGS = [
+    # repeated callsign: the LAST line's values at the FIRST position
+    (
+        "Got a response of Respond to A B(1) at 12/08/2025 18:28:20 MST.\n"
+        "Got a response of Respond to C(2) at 12/08/2025 18:29:00 EST.\n"
+        "Got a response of Arrived to A B(1) at 12/08/2025 18:40:00 MST.",
+        [
+            ("A B", "Arrived", "2025-12-09T01:40:00.000Z"),
+            ("C", "Respond", "2025-12-08T23:29:00.000Z"),
+        ],
+    ),
+    # prefix-only line: unmatched → the 'Unknown' sentinel link
+    ("Got a response of ", [("Unknown", "Unknown", None)]),
+    # garbage time and month overflow → NULL time, link kept
+    (
+        "Got a response of Respond to G(3) at not a time.\n"
+        "Got a response of Respond to M(4) at 13/01/2025 10:00:00 EST.",
+        [("G", "Respond", None), ("M", "Respond", None)],
+    ),
+    # mangled whitespace (trimmed fields, doubled separators) and dashes
+    (
+        "Got a response of  Respond  to  W  (5) at 12/08/2025  18:27:47 EST.\n"
+        "Got a response of Arrived to D(6) at 12-08-2025 18:27:47 CST.",
+        [
+            ("W", "Respond", "2025-12-08T23:27:47.000Z"),
+            ("D", "Arrived", "2025-12-09T00:27:47.000Z"),
+        ],
+    ),
+    # unknown abbreviation and no abbreviation → UTC; half-hour NST zone
+    (
+        "Got a response of Respond to X(7) at 12/08/2025 18:27:47 XYZ.\n"
+        "Got a response of Respond to N(8) at 12/08/2025 18:27:47.\n"
+        "Got a response of Respond to S(9) at 12/08/2025 18:27:47 NST.",
+        [
+            ("X", "Respond", "2025-12-08T18:27:47.000Z"),
+            ("N", "Respond", "2025-12-08T18:27:47.000Z"),
+            ("S", "Respond", "2025-12-08T21:57:47.000Z"),
+        ],
+    ),
+    ("", []),
+    (None, []),
+]
+
+
+def _hostile_alerts(spark):
+    base = {c: "" for c in ALERT_COLUMNS}
+    base.update(sent="12/08/2025 18:27:47 MST", lat="39.7", lon="-104.9")
+    rows = [
+        tuple({**base, "id": str(i), "responses": log}[c] for c in ALERT_COLUMNS)
+        for i, (log, _links) in enumerate(HOSTILE_LOGS)
+    ]
+    return spark.createDataFrame(rows, ALERTS_SCHEMA)
+
+
+def test_hostile_logs_links_golden(spark):
+    from etl_active911_spark.pipeline.active911 import links_array_native
+
+    got = {
+        r["id"]: [(l["callsign"], l["remarks"], l["production_time"]) for l in r["links"]]
+        for r in _hostile_alerts(spark)
+        .select("id", links_array_native(time_as_iso=True).alias("links"))
+        .collect()
+    }
+    for i, (log, want) in enumerate(HOSTILE_LOGS):
+        assert got[str(i)] == want, f"{log!r}: got {got[str(i)]!r}, want {want!r}"
+
+
+def test_hostile_logs_array_native_equals_explode(spark):
+    alerts = _hostile_alerts(spark)
+    a = to_features(alerts, array_native=True).collect()
+    b = to_features(alerts, array_native=False).collect()
+    canon = lambda rows: sorted((r["id"], repr(r["properties"])) for r in rows)  # noqa: E731
+    assert len(a) == len(HOSTILE_LOGS)
+    assert canon(a) == canon(b)
+
+
+@pytest.mark.parametrize("now_year", [None, 2025])
+def test_parse_same_at_top_level_and_inside_lambda(spark, now_year):
+    """Each parse entry point binds its sub-expressions with lambda
+    variables; nested inside a caller's ``transform`` lambda it must give
+    exactly its top-level values. Compared as strings: the accepted-delta
+    years 0 and 3 have no Python datetime."""
+    from etl_active911_spark.functions.timeparse import parse_alert_time, parse_alert_time_ntz
+
+    raws = [r for r, _ in TZ_CASES + ACCEPTED_DELTA_CASES] + [r for r, _, _ in NOW_YEAR_CASES]
+    for fn in (parse_alert_time, parse_alert_time_ntz, parse_alert_time_iso):
+        top = [
+            r["v"]
+            for r in spark.createDataFrame([(r,) for r in raws], "s string")
+            .select(fn(F.col("s"), now_year).cast("string").alias("v"))
+            .collect()
+        ]
+        nested = (
+            spark.range(1)
+            .select(
+                F.transform(
+                    F.array(*[F.lit(r) for r in raws]), lambda s: fn(s, now_year).cast("string")
+                ).alias("v")
+            )
+            .first()["v"]
+        )
+        assert nested == top, fn.__name__
+        assert any(v is not None for v in top) and any(v is None for v in top)

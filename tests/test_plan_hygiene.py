@@ -15,6 +15,8 @@ construction, not by statistics), and the iterative builders stay cheap.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from etl_active911_spark.plans import registry
@@ -323,3 +325,22 @@ def test_windowed_query_plan_hygiene(spark, name):
         f"— a struct-valued max/min probably fell out of hash aggregation; "
         f"reformulate (int64 order-encoding) or justify in SORTAGG_ALLOWED"
     )
+
+
+#: Ceilings on the regex nodes in the optimized plan of ``to_features``
+#: over one alert. Inside the links and time-parse lambdas every
+#: sub-expression REFERENCE is evaluated again (CLAUDE.md rule 1), so
+#: both layers bind each shared value once (``timeparse.let``); a
+#: reintroduced duplicated reference multiplies these counts (the
+#: unbound tree held 1061 regexp_extract, 282 rlike, 264 regexp_replace).
+TRANSFORM_REGEX_NODES = {"regexp_extract": 29, "rlike": 1, "regexp_replace": 2}
+
+
+def test_alert_transform_evaluates_each_regex_once(spark):
+    from etl_active911_spark.pipeline.active911 import ALERT_COLUMNS, ALERTS_SCHEMA, to_features
+
+    one = spark.createDataFrame([tuple("" for _ in ALERT_COLUMNS)], ALERTS_SCHEMA)
+    plan = to_features(one)._jdf.queryExecution().optimizedPlan().toString()
+    counts = {k: len(re.findall(rf"\b{k}\b", plan, re.IGNORECASE)) for k in TRANSFORM_REGEX_NODES}
+    for k, cap in TRANSFORM_REGEX_NODES.items():
+        assert 0 < counts[k] <= cap, f"{k}: {counts[k]} nodes planned, ceiling {cap} — {counts}"
