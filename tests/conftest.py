@@ -7,6 +7,18 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+#: DuckDB's bundled jemalloc reads MALLOC_CONF once, when duckdb is first
+#: imported, so this must run before any test module imports it. Without
+#: ``retain`` it unmaps freed slabs one by one: the regex-heavy
+#: x7_temporal_hotspots oracle alone left 14k-64k separate 20-80 KB
+#: mappings in this process (4 DuckDB threads), and once the process
+#: reaches the kernel's vm.max_map_count (65530) every later mmap fails —
+#: DuckDB raises "Failed to allocate block ... (bad allocation)" on each
+#: following oracle, and numpy/OpenBLAS in x3_pca_project spins until the
+#: run's time limit. With ``retain:true`` the same oracle peaks at ~1.5k
+#: mappings at unchanged speed.
+os.environ.setdefault("MALLOC_CONF", "retain:true")
+
 #: Driver-budget gate (r16, VERDICT r15 item 2): the suite grew to ~1400
 #: tests / ~45 min, which exceeds the driver's verify window — VERIFY_r15
 #: recorded `tests_ok: false` with the run CUT at 36% and zero failures
@@ -15,12 +27,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: every registered query, the 50-window correctness replica, oracle output
 #: types, plan hygiene, the plan-memo no-data-caching contract, registry
 #: order, bench-harness pins, and the r15/r16 optimization plan-shape pins).
-#: A test FILE named on the command line (`pytest tests/test_active911.py`,
-#: or a `file::test` node id) always runs in full — the gate only thins
-#: directory-wide runs. Set SPARK_GRAFT_FULL_TESTS=1 for the full ~45-min
-#: suite — that remains the local pre-commit gate (see CLAUDE.md); every
-#: test stays collected and green there, nothing is deleted or skipped
-#: permanently.
+#: A TARGETED run — one that names only test files outside the gate
+#: (`pytest tests/test_active911.py`, or a `file::test` node id) — runs
+#: them in full. A suite-wide run — one that names a directory, names no
+#: path, or names any gate module (`pytest tests/test_*.py` names them
+#: all) — gets the gate, and any named file it drops is reported on
+#: stderr. Set SPARK_GRAFT_FULL_TESTS=1 for the full ~45-min suite — that
+#: remains the local pre-commit gate (see CLAUDE.md); every test stays
+#: collected and green there, nothing is deleted or skipped permanently.
 GATE_MODULES = {
     "test_oracle_parity.py",
     "test_local_correctness.py",
@@ -45,15 +59,26 @@ def named_files(args: list[str], cwd: str) -> set[str]:
     return {os.path.realpath(p) for p in paths if os.path.isfile(p)}
 
 
+def is_targeted(args: list[str], cwd: str) -> bool:
+    """True when ``args`` name test files only, none of them a gate
+    module: such a run executes the named files in full. Anything else
+    (a directory, no path, or a gate module among the files) is a
+    suite-wide run and gets the gate."""
+    paths = [os.path.join(cwd, a.split("::", 1)[0]) for a in args]
+    if not paths or not all(os.path.isfile(p) for p in paths):
+        return False
+    return not any(os.path.basename(p) in GATE_MODULES for p in paths)
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get(FULL_ENV) == "1":
         return
-    named = named_files(config.args, str(config.invocation_params.dir))
+    cwd = str(config.invocation_params.dir)
+    if is_targeted(config.args, cwd):
+        return
     keep, drop = [], []
     for item in items:
-        path = str(item.fspath)
-        selected = os.path.basename(path) in GATE_MODULES or os.path.realpath(path) in named
-        (keep if selected else drop).append(item)
+        (keep if os.path.basename(str(item.fspath)) in GATE_MODULES else drop).append(item)
     if not drop:
         return
     config.hook.pytest_deselected(items=drop)
@@ -62,6 +87,15 @@ def pytest_collection_modifyitems(config, items):
         f"[conftest] driver-budget gate: {len(keep)} contract-critical tests "
         f"selected, {len(drop)} deselected ({FULL_ENV}=1 runs everything)\n"
     )
+    skipped = sorted(
+        os.path.basename(p) for p in named_files(config.args, cwd)
+        if os.path.basename(p) not in GATE_MODULES
+    )
+    if skipped:
+        sys.stderr.write(
+            f"[conftest] WARNING: named test files outside the gate were NOT run: "
+            f"{', '.join(skipped)} — name them without a gate module, or set {FULL_ENV}=1\n"
+        )
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

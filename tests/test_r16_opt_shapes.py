@@ -89,9 +89,11 @@ def test_driver_gate_selects_contract_modules():
 
 def test_named_test_file_runs_in_full():
     """`pytest tests/test_active911.py` must run that file, not
-    deselect it silently. Files named on the command line (also as a
-    node id) are kept; a directory names nothing, so `pytest tests/`
-    still runs only the gate."""
+    deselect it silently. A run naming only files outside the gate (also
+    as node ids) is targeted and runs them in full; a directory, no
+    path, or any gate module among the named files (`pytest
+    tests/test_*.py` names every module) keeps the gate, so a suite-wide
+    run stays inside its budget however it is spelled."""
     from tests import conftest as c
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -100,3 +102,15 @@ def test_named_test_file_runs_in_full():
         root,
     )
     assert named == {os.path.realpath(os.path.join(root, "tests", "test_active911.py"))}
+    assert c.is_targeted(["tests/test_active911.py"], root)
+    assert c.is_targeted(["tests/test_active911.py::test_feature_shape_and_remarks_whitespace",
+                          "tests/test_source.py"], root)
+    assert not c.is_targeted([], root)
+    assert not c.is_targeted(["tests"], root)
+    assert not c.is_targeted(["tests", "tests/test_active911.py"], root)
+    assert not c.is_targeted(["tests/test_active911.py", "tests/test_plan_hygiene.py"], root)
+    every_module = sorted(
+        os.path.join("tests", f) for f in os.listdir(os.path.join(root, "tests"))
+        if f.startswith("test_") and f.endswith(".py")
+    )
+    assert not c.is_targeted(every_module, root)
