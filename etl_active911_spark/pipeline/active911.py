@@ -268,6 +268,17 @@ def _build_links_array(time_as_iso: bool) -> Column:
     return let(F.transform(lines, parse_line), links_of)
 
 
+def alert_start() -> Column:
+    """O-15 (task.ts:215): the feature's ``start`` time, parsed from
+    ``sent``. Memoized like ``links_array_native``: building the parse
+    tree costs py4j round trips on every ``to_features`` call. The tree
+    is unresolved, so each plan still binds the session time zone at its
+    own analysis."""
+    from etl_active911_spark.plans.cache import memo_cols
+
+    return memo_cols("active911.start", lambda: parse_alert_time(F.col("sent")))
+
+
 def alert_remarks() -> Column:
     """O-16 (task.ts:221-226): the remarks template literal, byte-exact
     (leading newline, 32-space indents, 28-space tail)."""
@@ -298,7 +309,7 @@ def to_features(alerts: DataFrame, array_native: bool = True) -> DataFrame:
             F.lit("Feature").alias("type"),
             F.struct(
                 F.col("description").alias("callsign"),
-                parse_alert_time(F.col("sent")).alias("start"),
+                alert_start().alias("start"),
                 F.col("links"),
                 alert_remarks().alias("remarks"),
             ).alias("properties"),
@@ -322,7 +333,7 @@ def to_features(alerts: DataFrame, array_native: bool = True) -> DataFrame:
         F.lit("Feature").alias("type"),
         F.struct(
             F.col("description").alias("callsign"),
-            parse_alert_time(F.col("sent")).alias("start"),
+            alert_start().alias("start"),
             F.col("links"),
             alert_remarks().alias("remarks"),
         ).alias("properties"),

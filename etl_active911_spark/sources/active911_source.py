@@ -6,7 +6,10 @@ Spark 4 Python DataSource API — no JVM code. The reference's shape maps as:
 - login + cookie jar + JWT (task.ts:245-279)  → driver-side ``Transport``
   setup, once per read.
 - per-agency sequential fetch loop (task.ts:124) → one ``InputPartition``
-  per agency: Spark parallelizes what the reference serializes.
+  per agency: Spark parallelizes what the reference serializes. The
+  control stream (streaming/jobs.py) keeps the reference's loop instead:
+  ``Active911Reader.pull`` reads the agencies one after another on the
+  driver, where a small pull costs less than a Python task per agency.
 - 6-hour time window in the POST body (task.ts:134-135) → ``from_date`` /
   ``to_date`` reader options: the time-range predicate is *pushed into the
   fetch*, never filtered client-side — the source's one genuine
@@ -45,6 +48,9 @@ SOURCE_SCHEMA = StructType(
     [StructField(c, StringType()) for c in ALERT_COLUMNS]
     + [StructField("agency_id", StringType()), StructField("_error", StringType())]
 )
+
+#: Pulls a stream makes when the ``max_pulls`` option is absent.
+MAX_PULLS = 2
 
 _JSONP_RE = re.compile(r"^.*?\(")  # task.ts:158 — strip 'callback(' prefix
 
@@ -184,23 +190,39 @@ class Active911Reader(DataSourceReader):
         except Exception as err:  # noqa: BLE001 — per-agency isolation (task.ts:233-235)
             yield tuple([None] * len(ALERT_COLUMNS)) + (agency, f"{type(err).__name__}: {err}")
 
+    def pull(self) -> list[tuple]:
+        """One scheduled pull: every agency's rows, read one agency after
+        another in this process (task.ts:124)."""
+        return [row for part in self.partitions() for row in self.read(part)]
+
+
+def alerts_table(rows: list[tuple]):
+    """Source rows as one all-string Arrow table in ``SOURCE_SCHEMA``
+    order, for ``spark.createDataFrame(table, SOURCE_SCHEMA)``."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(SOURCE_SCHEMA)
+    return pa.table([pa.array(c, pa.string()) for c in cols], names=SOURCE_SCHEMA.names)
+
 
 class Active911StreamReader:
-    """Streaming variant (SimpleDataSourceStreamReader): each micro-batch is
-    one scheduled pull of the archived-alerts window, exactly the
-    reference's invocation model (task.ts:81 Schedule + the overlapping
-    6-hour window, task.ts:134-135). Because windows overlap, consecutive
-    batches re-emit alerts — downstream dedup is
-    ``dropDuplicatesWithinWatermark(['id'])`` (see streaming/jobs.py),
-    which is how the TAK sink's stable-feature-id dedup maps to Spark.
+    """Streaming variant (SimpleDataSourceStreamReader) for
+    ``spark.readStream.format("active911")``: each micro-batch is one
+    scheduled pull of the archived-alerts window, the reference's
+    invocation model (task.ts:81 Schedule + the overlapping 6-hour window,
+    task.ts:134-135). Because windows overlap, consecutive batches
+    re-emit alerts; the consumer dedups them by id (the control stream
+    runs ``dropDuplicates(["id"])`` on each batch).
 
     The offset is the pull counter; ``max_pulls`` bounds the fixture
-    stream so AvailableNow terminates.
+    stream so AvailableNow terminates. Spark starts a fresh Python process
+    to host this reader on every query start, so ``run_control_stream``
+    does not use it (streaming/jobs.py).
     """
 
     def __init__(self, options: dict):
         self.batch = Active911Reader(options)
-        self.max_pulls = int(options.get("max_pulls", 2))
+        self.max_pulls = int(options.get("max_pulls", MAX_PULLS))
 
     def initialOffset(self) -> dict:
         return {"pull": 0}
@@ -209,21 +231,11 @@ class Active911StreamReader:
         pull = start["pull"]
         if pull >= self.max_pulls:
             return iter([]), {"pull": pull}
-        rows = [
-            row
-            for part in self.batch.partitions()
-            for row in self.batch.read(part)
-        ]
-        return iter(rows), {"pull": pull + 1}
+        return iter(self.batch.pull()), {"pull": pull + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         if end["pull"] > start["pull"]:
-            rows = [
-                row
-                for part in self.batch.partitions()
-                for row in self.batch.read(part)
-            ]
-            return iter(rows)
+            return iter(self.batch.pull())
         return iter([])
 
     def commit(self, end: dict) -> None:

@@ -19,6 +19,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from etl_active911_spark.streaming.windows import tumbling_counts
 
@@ -93,14 +94,21 @@ def run_control_stream(
     checkpoint_dir: str,
     source_options: dict | None = None,
     max_features_per_post: int = 1000,
-) -> None:
+) -> StreamingQuery:
     """The reference's COMPLETE lifecycle (task.ts:98-243) as ONE streaming
     job: authenticated windowed source pulls → dead-letter routing →
     alert→Feature transform → deduplicated FeatureCollection POSTs.
+    Returns the terminated query (its progress names the tick source).
 
     Mapping, stage by stage:
-    - source: the ``active911`` streaming reader (one partition per agency,
-      window pushed into the fetch) — task.ts:124-148;
+    - schedule: Spark's JVM ``rate-micro-batch`` source emits one tick per
+      micro-batch; the batch id is the pull index, kept in the checkpoint,
+      so a restart resumes at the next pull (task.ts:81 Schedule). Batches
+      from ``max_pulls`` on return without pulling. A Python streaming
+      source would cost a fresh interpreter on every query start;
+    - source: the driver runs one pull (``Active911Reader.pull``: the
+      agencies one after another, window pushed into each fetch —
+      task.ts:124-148) and hands the rows to the JVM as one Arrow table;
     - error routing: ``_error`` rows are diverted, not fatal — task.ts:123;
     - transform: ``to_features`` (zero-shuffle array-native links);
     - dedup: overlapping pull windows re-emit alerts; stable feature ids
@@ -110,28 +118,38 @@ def run_control_stream(
       http_sink.py), batch-atomic via foreachBatch.
     """
     from etl_active911_spark.pipeline.active911 import to_features
-    from etl_active911_spark.sources import active911_source
+    from etl_active911_spark.sources import active911_source as src
     from etl_active911_spark.streaming.http_sink import http_sink_foreach_batch
 
-    active911_source.register(spark)
-    reader = spark.readStream.format("active911")
-    for k, v in (source_options or {}).items():
-        reader = reader.option(k, v)
-    alerts = reader.load()
+    # registered for the session's `format("active911")` readers; the
+    # control stream itself does not go through the data source
+    src.register(spark)
+    options = dict(source_options or {})
+    reader = src.Active911Reader(options)
+    max_pulls = int(options.get("max_pulls", src.MAX_PULLS))
     post = http_sink_foreach_batch(submit_url, max_features_per_post)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        good = batch_df.filter(F.col("_error").isNull())
+    def sink(ticks: DataFrame, batch_id: int) -> None:
+        if batch_id >= max_pulls:
+            return
+        table = src.alerts_table(reader.pull())
+        alerts = ticks.sparkSession.createDataFrame(table, src.SOURCE_SCHEMA)
+        good = alerts.filter(F.col("_error").isNull())
         features = to_features(good.drop("agency_id", "_error")).dropDuplicates(["id"])
         post(features, batch_id)
 
-    (
-        alerts.writeStream.foreachBatch(sink)
+    query = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 1)
+        .option("numPartitions", 1)
+        .load()
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-        .awaitTermination()
     )
+    query.awaitTermination()
+    return query
 
 
 def run_upsert_to_parquet(

@@ -78,6 +78,26 @@ def test_agency_subset(spark, fixture_dir):
     assert {r["id"] for r in df.collect()} == {"43", "44"}
 
 
+def test_driver_pull_matches_partitioned_read(spark, fixture_dir):
+    """``Active911Reader.pull`` (the control stream's driver-side pull)
+    handed over as an Arrow table gives the rows the partitioned batch
+    read gives, dead letter included; an empty pull keeps the schema."""
+    from etl_active911_spark.sources.active911_source import (
+        SOURCE_SCHEMA,
+        Active911Reader,
+        alerts_table,
+    )
+
+    rows = Active911Reader({"fixture_dir": fixture_dir}).pull()
+    pulled = spark.createDataFrame(alerts_table(rows), SOURCE_SCHEMA)
+    read = spark.read.format("active911").option("fixture_dir", fixture_dir).load()
+    assert pulled.schema == read.schema == SOURCE_SCHEMA
+    assert sorted(pulled.collect(), key=str) == sorted(read.collect(), key=str)
+    assert len(rows) == 4
+    empty = spark.createDataFrame(alerts_table([]), SOURCE_SCHEMA)
+    assert empty.schema == SOURCE_SCHEMA and empty.count() == 0
+
+
 def test_streaming_overlapping_pulls_dedup(spark, fixture_dir):
     """O-2 streaming shape: two scheduled pulls of the same (overlapping)
     window re-emit every alert; dropDuplicatesWithinWatermark by id
