@@ -901,64 +901,18 @@ def x2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session-scoped memo of the verified near-dup pair list, keyed by
-#: (Spark application id, fixture dir). The pair graph is the shared
-#: upstream of FIVE registered queries (x2_dup_clusters[_star],
-#: x2_graph_pagerank, x2_graph_triangles, x8_cluster_split) — in any sweep
-#: that runs more than one of them, recomputing the MinHash pipeline per
-#: query was the suite's biggest repeated cost (VERDICT r05 item 4).
-#: localCheckpoint (not persist): every consumer is an iterative loop or a
-#: multi-leg join that needs LINEAGE TRUNCATION (CLAUDE.md rule 17), and
-#: the materialized pair list is tiny (near-dup pairs ≪ corpus).
-#: Value = (fixture fingerprint, checkpointed DataFrame) — see
-#: shared_verified_pairs for the invalidation contract.
-_PAIRS_MEMO: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
-
-
 def shared_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``x2_minhash_lsh`` result, materialized once per (session, sf_dir)
-    and reused across queries — the cross-query analogue of
-    ``scoped_persist`` for the dedup family's common subexpression.
-
-    ASSUMES IMMUTABLE FIXTURES (ADVICE r06): the memo key carries the
-    parquet file list + mtimes as a cheap fingerprint, so rewriting the
-    data at ``sf_dir`` within one session invalidates the entry instead
-    of silently serving stale pairs to the five consumer queries. The
-    checkpoint blocks of an invalidated entry are unpersisted. Tests can
-    call :func:`clear_pairs_memo` for a hard reset."""
-    import os
-
-    fp_dir = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    try:
-        if os.path.isdir(fp_dir):
-            files = sorted(
-                (f, os.path.getmtime(os.path.join(fp_dir, f)))
-                for f in os.listdir(fp_dir)
-            )
-            fingerprint = tuple(files)
-        else:
-            fingerprint = (("", os.path.getmtime(fp_dir)),)
-    except OSError:
-        fingerprint = ()
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    got = _PAIRS_MEMO.get(key)
-    if got is not None and got[0] != fingerprint:
-        got[1].unpersist()
-        got = None
-    if got is None:
-        got = (fingerprint, x2_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True))
-        _PAIRS_MEMO[key] = got
-    return got[1]
-
-
-def clear_pairs_memo() -> None:
-    """Drop all memoized pair lists and release their checkpoint blocks."""
-    for _, df in _PAIRS_MEMO.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _PAIRS_MEMO.clear()
+    by the rule-25 ``fixture_memo`` (VERDICT r05 item 4): the pair graph
+    is the shared upstream of the dedup family (x2_dup_clusters[_star],
+    x2_graph_pagerank, x2_graph_triangles, x8_cluster_split, …), whose
+    consumers are iterative loops or multi-leg joins that need its
+    lineage truncated (rule 17); the pair list is tiny (≪ corpus).
+    Rewriting ``documents.parquet`` invalidates the entry and releases
+    its blocks (ADVICE r06)."""
+    return fixture_memo(
+        "dedup.verified_pairs", spark, sf_dir, lambda: x2_minhash_lsh(spark, sf_dir)
+    )
 
 
 def shared_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1000,7 +954,6 @@ def shared_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the star loop's localCheckpoint discipline (rule 17) composes with
     the memo's own checkpoint."""
     from etl_active911_spark.operators.clustering import connected_components_star
-    from etl_active911_spark.plans.cache import fixture_memo
 
     return fixture_memo(
         "dedup.component_labels",
@@ -3023,8 +2976,6 @@ def shared_scrub_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     way ``textual.shared_gopher_rules`` does: fixture-fingerprint
     invalidation, localCheckpoint materialization, tiny result (one row
     per doc, no text)."""
-    from etl_active911_spark.plans.cache import fixture_memo
-
     return fixture_memo(
         "dedup.scrub_ledger",
         spark,

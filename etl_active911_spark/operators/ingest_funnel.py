@@ -250,11 +250,12 @@ def _build_funnel_rows(spark: "SparkSession", sf_dir: str) -> "DataFrame":
 def ingest_funnel_rows(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """Per-doc composed-funnel verdicts, memoized per (session, sf_dir)
     (rule 25: consumed by the registered aggregate, the stream≡batch
-    pin, and the interaction pin)."""
+    pin, and the interaction pin). Fingerprints every table: the funnel
+    reads documents and embeddings."""
     from etl_active911_spark.plans.cache import fixture_memo
 
     return fixture_memo(
-        "ingest.funnel_rows", spark, sf_dir, lambda: _build_funnel_rows(spark, sf_dir)
+        "ingest.funnel_rows", spark, sf_dir, lambda: _build_funnel_rows(spark, sf_dir), table="*"
     )
 
 

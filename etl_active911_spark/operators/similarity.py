@@ -242,14 +242,13 @@ def _ann_projs(spark: SparkSession, emb: DataFrame) -> DataFrame:
     ONE definition for x3_ann_lsh / x3_ann_lsh_multiprobe /
     x3_ann_method_recall — their superset/identity guarantees require
     bit-identical signatures, so the pipeline must never fork."""
-    from etl_active911_spark.plans.cache import memo_cols, memo_const_df
+    from etl_active911_spark.plans.cache import memo_cols
 
     # the 64×33 sign matrix is a MODULE CONSTANT — memoize the DataFrame
     # (createDataFrame ships every literal through py4j per call,
     # ~0.15 s of the build); used once per plan (rule-29 caveat holds)
-    planes = memo_const_df(
+    planes = memo_cols(
         "similarity.ann_planes",
-        spark,
         lambda: spark.createDataFrame(
             [tuple([d] + _ANN_SIGNS[d]) for d in range(EMB_DIM)],
             "d int, " + ", ".join(f"s{p} int" for p in range(ANN_N_PLANES)),

@@ -35,32 +35,21 @@ from etl_active911_spark.plans.registry import query
 )
 def x4_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X-4: per-document token counts, type-token ratio, avg token length —
-    whitespace tokenization, single scan, no shuffle.
-
-    Plan-memoized (r15, the x4_token_stats driver-creep attribution —
-    BASELINE.md r15): per-call cost was ~60% driver-side plan build
-    (0.067 s parquet footer/listing re-read + 0.045 s Column trees vs
-    0.067 s exec on a 0.122 s anchor), the rule-35 cost class. The
-    analyzed plan is immutable and this is a leaf scan→project pipeline
-    (no self-join consumer — the rule-29 caveat in plan_memo's
-    docstring), so one instance serves every invocation."""
-    from etl_active911_spark.plans.cache import plan_memo
-
-    def build() -> DataFrame:
-        docs = read_table(spark, sf_dir, "documents")
-        toks = F.split(F.trim(F.col("text")), r"\s+")
-        token_chars = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
-        return docs.select(
-            "doc_id",
-            "lang",
-            "n_chars",
-            F.size(toks).cast("bigint").alias("n_tokens"),
-            F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct_tokens"),
-            F.round(token_chars.cast("double") / F.size(toks), 6).alias("avg_token_len"),
-            F.round(F.size(F.array_distinct(toks)).cast("double") / F.size(toks), 6).alias("ttr"),
-        )
-
-    return plan_memo("x4_token_stats", spark, sf_dir, build)
+    whitespace tokenization, single scan, no shuffle. A leaf
+    scan→project pipeline, so the registry plan-memoizes it
+    (``registry.PLAN_MEMOED``)."""
+    docs = read_table(spark, sf_dir, "documents")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    token_chars = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
+    return docs.select(
+        "doc_id",
+        "lang",
+        "n_chars",
+        F.size(toks).cast("bigint").alias("n_tokens"),
+        F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct_tokens"),
+        F.round(token_chars.cast("double") / F.size(toks), 6).alias("avg_token_len"),
+        F.round(F.size(F.array_distinct(toks)).cast("double") / F.size(toks), 6).alias("ttr"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -744,10 +733,10 @@ def shared_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir) and reused across queries — the quality gate is the shared
     upstream of THREE registered curation builds (x9_curation_v3/v4/v5),
     each of which re-ran the full two-explode token/bigram pipeline
-    (~2.5-3.5 s at sf0.1) before r7. Same contract as
-    ``dedup.shared_verified_pairs``: fixture-fingerprint invalidation,
-    localCheckpoint materialization (consumers compose with iterative
-    cluster drops — rule 17), tiny result (one row per doc, no text)."""
+    (~2.5-3.5 s at sf0.1) before r7. A ``plans.cache.fixture_memo``:
+    fixture-fingerprint invalidation, localCheckpoint materialization
+    (consumers compose with iterative cluster drops — rule 17), tiny
+    result (one row per doc, no text)."""
     from etl_active911_spark.plans.cache import fixture_memo
 
     return fixture_memo(

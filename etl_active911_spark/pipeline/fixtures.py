@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_active911_spark.io import read_table
+from etl_active911_spark.plans.cache import plan_memo
 
 _ABBRS = [
     "EDT", "EST", "CDT", "CST", "MDT", "MST", "PDT", "PST",
@@ -163,31 +164,15 @@ FROM (
 """
 
 
-#: Plan-level memo (r14, a911 anchor attribution — BASELINE.md r14):
-#: ~30 registered queries call ``synthetic_alerts`` and each call paid
-#: parquet-footer read + temp-view registration + SQL parse/analysis of
-#: the fixture text (~0.35 s driver-side) to rebuild the IDENTICAL
-#: logical plan. The analyzed DataFrame is immutable, so it is cached per
-#: (application, sf_dir) and invalidated when orders.parquet changes —
-#: same fingerprint contract as ``plans.cache.fixture_memo``, but NO data
-#: materialization: this caches only the plan, every execution still
-#: runs the full fixture derivation.
-_PLAN_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
-
-
 def synthetic_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic alerts table in Spark (same SQL text the DuckDB
-    oracle runs, so inputs are identical on both sides)."""
-    import os
+    oracle runs, so inputs are identical on both sides). About 30
+    registered queries read it, so its analyzed plan is memoized
+    (``plan_memo``, rule 35: the SQL parse and analysis cost ~0.35 s per
+    build) and invalidated when ``orders.parquet`` changes."""
 
-    from etl_active911_spark.plans.cache import _fixture_fingerprint
+    def build() -> DataFrame:
+        read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+        return spark.sql(SYNTH_ALERTS_SQL)
 
-    fp = _fixture_fingerprint(sf_dir, "orders")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    got = _PLAN_MEMO.get(key)
-    if got is not None and got[0] == fp:
-        return got[1]
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    df = spark.sql(SYNTH_ALERTS_SQL)
-    _PLAN_MEMO[key] = (fp, df)
-    return df
+    return plan_memo("fixtures.synthetic_alerts", spark, sf_dir, build, table="orders")

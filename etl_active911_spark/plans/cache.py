@@ -52,20 +52,29 @@ def scoped_register(key: str, df: DataFrame) -> DataFrame:
     next invocation must re-persist a plain copy themselves."""
     prev = _LIVE.pop(key, None)
     if prev is not None and prev is not df:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # owning SparkSession already stopped — nothing to free
+        _release(prev)
     _LIVE[key] = df
     return df
 
 
-_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
+def _release(df: DataFrame, checkpointed: bool = False) -> None:
+    """Unpersist ``df`` (non-blocking), tolerating its session having
+    been stopped since — nothing is left to free then.
+    ``Dataset.unpersist`` only drops CacheManager entries: the blocks of
+    a ``localCheckpoint``-ed frame (``checkpointed``) live on the RDD
+    under its LogicalRDD leaf, so that RDD is unpersisted instead."""
+    try:
+        if checkpointed:
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+        else:
+            df.unpersist(blocking=False)
+    except Exception:
+        pass
 
 
 def _fixture_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
     """Cheap change-detection for a fixture table: parquet file list +
-    mtimes (the shared_verified_pairs invalidation contract, ADVICE r06).
+    mtimes (the fixture-memo invalidation contract, ADVICE r06).
 
     ``table="*"`` fingerprints EVERY ``*.parquet`` entry under ``sf_dir``
     — for memos over queries that read several tables (r15 optimization
@@ -91,40 +100,54 @@ def _fixture_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
         return ()
 
 
-def fixture_memo(name, spark, sf_dir, builder, table: str = "documents") -> DataFrame:
-    """Session-scoped memo of a small derived DataFrame shared by SEVERAL
-    registered queries (the cross-query analogue of ``scoped_persist``;
-    pattern established by ``dedup.shared_verified_pairs``): built once
-    per (application, sf_dir), materialized with an eager
-    ``localCheckpoint`` (consumers include iterative loops — lineage
-    truncation, CLAUDE.md rule 17), and invalidated when the backing
-    fixture parquet changes (file list + mtimes). ``clear_fixture_memos``
-    gives tests a hard reset. Only use for results that are SMALL
-    (≪ corpus — keep lists, pair graphs): the blocks pin executor memory
-    for the session."""
+def _lookup(
+    store: dict, name: str, spark, sf_dir: str, table: str, build,
+    *, holds_data: bool, key_extra: tuple = (),
+):
+    """The one memo decision shared by ``fixture_memo`` and ``plan_memo``:
+    key ``name`` per (application, sf_dir) plus ``key_extra``, serve the
+    stored value while the fixture fingerprint of ``table`` under
+    ``sf_dir`` is unchanged, else rebuild via ``build()`` — releasing the
+    stale value's checkpoint blocks first when it ``holds_data``."""
     import os
 
+    key = (name, spark.sparkContext.applicationId, os.path.abspath(sf_dir)) + key_extra
     fp = _fixture_fingerprint(sf_dir, table)
-    key = (name, spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    got = _MEMO.get(key)
-    if got is not None and got[0] != fp:
-        try:
-            got[1].unpersist()
-        except Exception:
-            pass
-        got = None
-    if got is None:
-        got = (fp, builder().localCheckpoint(eager=True))
-        _MEMO[key] = got
+    got = store.get(key)
+    if got is None or got[0] != fp:
+        if got is not None and holds_data:
+            _release(got[1], checkpointed=True)
+        got = store[key] = (fp, build())
     return got[1]
+
+
+_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
+
+
+def fixture_memo(name, spark, sf_dir, builder, table: str = "documents") -> DataFrame:
+    """Session-scoped memo of a small derived DataFrame shared by SEVERAL
+    registered queries (the cross-query analogue of ``scoped_persist``):
+    built once per (application, sf_dir), materialized with an eager
+    ``localCheckpoint`` (consumers include iterative loops — lineage
+    truncation, CLAUDE.md rule 17), and invalidated when the backing
+    fixture parquet changes (file list + mtimes) — the stale entry's
+    blocks are released. ``clear_fixture_memos`` gives tests a hard
+    reset. Only use for results that are SMALL (≪ corpus — keep lists,
+    pair graphs): the blocks pin executor memory for the session."""
+    return _lookup(
+        _MEMO,
+        name,
+        spark,
+        sf_dir,
+        table,
+        lambda: builder().localCheckpoint(eager=True),
+        holds_data=True,
+    )
 
 
 def clear_fixture_memos() -> None:
     for _, df in _MEMO.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        _release(df, checkpointed=True)
     _MEMO.clear()
 
 
@@ -133,33 +156,28 @@ _QPLAN_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 def plan_memo(name: str, spark, sf_dir: str, builder, table: str = "documents") -> DataFrame:
     """Memoize an ANALYZED DataFrame plan per (name, application,
-    sf_dir), invalidated when the backing fixture table changes — the
-    generalization of ``pipeline.fixtures._PLAN_MEMO`` (r14, a911
-    anchor) to any registered query whose per-call cost is dominated by
-    driver-side plan construction (rule 35: parquet footer + file
-    listing + py4j Column trees re-paid every invocation). NO data is
-    materialized: every execution still runs the full pipeline; only
-    the immutable analyzed plan is reused.
+    sf_dir, session timezone), invalidated when the backing fixture
+    table changes — for any query (or shared fixture plan, e.g.
+    ``pipeline.fixtures.synthetic_alerts``) whose per-call cost is
+    dominated by driver-side plan construction (rule 35: parquet footer
+    + file listing + py4j Column trees re-paid every invocation). NO
+    data is materialized: every execution still runs the full pipeline;
+    only the immutable analyzed plan is reused.
 
     Do NOT use for plans that must present FRESH lineage to a self-join
     / cogroup consumer (rule 29: those sites pass factories precisely to
     mint new dataset-ids) — memoization would resurrect the ambiguous
     self-join. Intended for leaf queries returning straight
     scan→project/aggregate pipelines."""
-    import os
-
-    fp = _fixture_fingerprint(sf_dir, table)
     # Session timezone is part of the key (r15 optimization round): the
     # events reader and analysis-time timestamp resolution embed the
     # SESSION zone into the analyzed plan, and the hostile-TZ sweep flips
     # the conf mid-session — a UTC-built plan must never serve a
     # Tokyo-session call.
     tz = spark.conf.get("spark.sql.session.timeZone")
-    key = (name, spark.sparkContext.applicationId, os.path.abspath(sf_dir), tz)
-    got = _QPLAN_MEMO.get(key)
-    if got is None or got[0] != fp:
-        got = (fp, builder())
-        _QPLAN_MEMO[key] = got
+    got = _lookup(
+        _QPLAN_MEMO, name, spark, sf_dir, table, builder, holds_data=False, key_extra=(tz,)
+    )
     # Return a FRESH Dataset over the memoized ANALYZED subtree, never the
     # stored object itself (r15 close-out fix): a Dataset's
     # QueryExecution materializes its physical plan ONCE, under whatever
@@ -173,7 +191,7 @@ def plan_memo(name: str, spark, sf_dir: str, builder, table: str = "documents") 
     # QueryExecution per call while re-analysis of the already-resolved
     # child is a fast pass — the memo still skips the expensive py4j
     # tree construction + first-principles analysis.
-    return got[1].select("*")
+    return got.select("*")
 
 
 def wrap_plan_memo(name: str, fn):
@@ -209,7 +227,6 @@ def wrap_plan_memo(name: str, fn):
         )
 
     wrapper._plan_memoed = True
-    wrapper.__wrapped_query__ = fn
     return wrapper
 
 
@@ -228,6 +245,12 @@ def memo_cols(key: str, builder):
     its exprId at construction — rule 29 class), and build LAZILY —
     never at import (CLAUDE.md rule 15).
 
+    Also serves a small DataFrame of MODULE CONSTANTS (a literal table
+    such as the ANN projection sign matrix: ``createDataFrame`` ships
+    every literal through py4j per call), under the same at-most-one-
+    reference-per-plan caveat. Never memoize fixture-derived data here:
+    that would be result caching.
+
     Entries are scoped to the active SparkContext's application id:
     Columns hold py4j object refs that die with the JVM, so a context
     restart must invalidate the memo, not serve stale handles."""
@@ -242,29 +265,3 @@ def memo_cols(key: str, builder):
         _COLS_MEMO[full] = got
     return got
 
-
-_CONST_DF_MEMO: dict[tuple, DataFrame] = {}
-
-
-def memo_const_df(key: str, spark, builder):
-    """Memoize a small DataFrame built from MODULE CONSTANTS — the
-    DataFrame analogue of ``memo_cols`` for literal tables (the ANN
-    projection sign matrix, a constant parameter list). NEVER use for
-    anything derived from fixture data: this memo survives across
-    invocations, so fixture-derived content here would be result
-    caching, which the engine bans. ``createDataFrame`` over a Python
-    list ships every literal through py4j and builds a LogicalRDD per
-    call (~0.1-0.2 s for a 64×33 table); the table is immutable and its
-    output exprIds are fixed, so one instance serves every plan —
-    subject to the rule-29 caveat: at most ONE reference per plan.
-    Scoped to the application id (same invalidation as memo_cols)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    app = sc.applicationId if sc is not None else None
-    full = (app, key)
-    got = _CONST_DF_MEMO.get(full)
-    if got is None:
-        got = builder()
-        _CONST_DF_MEMO[full] = got
-    return got

@@ -26,9 +26,10 @@ os.environ.setdefault("MALLOC_CONF", "retain:true")
 #: subset (~13 min quiet: the exact driver-replica oracle parity sweep over
 #: every registered query, the 50-window correctness replica, oracle output
 #: types, plan hygiene, the plan-memo no-data-caching contract, registry
-#: order, bench-harness pins, and the r15/r16 optimization plan-shape pins).
+#: order, bench-harness pins, the r15/r16 optimization plan-shape pins,
+#: and the paper's alert lifecycle: source, transform, HTTP transport).
 #: A TARGETED run — one that names only test files outside the gate
-#: (`pytest tests/test_active911.py`, or a `file::test` node id) — runs
+#: (`pytest tests/test_streaming.py`, or a `file::test` node id) — runs
 #: them in full. A suite-wide run — one that names a directory, names no
 #: path, or names any gate module (`pytest tests/test_*.py` names them
 #: all) — gets the gate, and any named file it drops is reported on
@@ -46,6 +47,9 @@ GATE_MODULES = {
     "test_r15_opt_shapes.py",
     "test_r16_opt_shapes.py",
     "test_signed_micro_division.py",
+    "test_active911.py",
+    "test_source.py",
+    "test_http_transport.py",
 }
 
 FULL_ENV = "SPARK_GRAFT_FULL_TESTS"

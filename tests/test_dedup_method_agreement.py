@@ -5,7 +5,6 @@ direction only (semantic-only) — union 3 pairs, intersection 1, so
 overlap_jaccard = half-up(1/3 · 1e6)/1e6 = 0.333333.
 """
 
-from etl_active911_spark.operators.dedup import clear_pairs_memo
 from etl_active911_spark.operators.similarity import EMB_DIM
 from etl_active911_spark.plans import registry
 from etl_active911_spark.plans.cache import clear_fixture_memos
@@ -21,7 +20,6 @@ def _unit(axis: int) -> list[float]:
 
 def test_agreement_confusion_cells(spark, tmp_path):
     clear_fixture_memos()
-    clear_pairs_memo()
     texts = {
         0: "zeta eta theta iota",
         1: "alpha beta gamma delta epsilon",
@@ -59,7 +57,6 @@ def test_agreement_confusion_cells(spark, tmp_path):
 
     row = registry.QUERIES["x2_dedup_method_agreement"](spark, str(tmp_path)).collect()[0]
     clear_fixture_memos()
-    clear_pairs_memo()
 
     assert row["n_lexical"] == 2, row
     assert row["n_semantic"] == 2, row

@@ -440,3 +440,20 @@ def test_long_lived_trigger_amortizes_fixed_cost(spark, tmp_path):
     # the marginal batch pays no stream start and no cold-JVM tax; a
     # structural fixed-cost regression would push it past the cold batch
     assert marginal_wall < 1.5 * cold_wall, (cold_wall, marginal_wall)
+
+
+def test_funnel_memo_tracks_every_input_table(spark, tmp_path):
+    """The funnel reads documents AND embeddings, so touching either
+    input must rebuild its fixture memo instead of serving the verdicts
+    built from the old files."""
+    import os
+    import shutil
+
+    from tests.conftest import SF_SMOKE
+
+    for t in ("documents", "embeddings"):
+        shutil.copy(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    first = ingest_funnel_rows(spark, str(tmp_path))
+    assert ingest_funnel_rows(spark, str(tmp_path)) is first
+    os.utime(tmp_path / "embeddings.parquet", (0, 0))
+    assert ingest_funnel_rows(spark, str(tmp_path)) is not first, "embeddings rewrite served stale rows"

@@ -1,4 +1,6 @@
-"""Contract tests for the r15 whole-plan memo (registry.PLAN_MEMOED).
+"""Contract tests for the memo layer (plans/cache): the r15 whole-plan
+memo (registry.PLAN_MEMOED, fixtures.synthetic_alerts) and the
+fixture-memo invalidation.
 
 The optimization removes per-call driver-side plan construction (rule 35)
 WITHOUT caching any data: every action on the memoized DataFrame must
@@ -43,50 +45,66 @@ def test_no_materialization_in_plan(spark, name):
         assert marker not in txt, f"{name}: {marker} in memoized plan"
 
 
+def _executed(df) -> str:
+    """The executed plan's text plus its first leaf's SQL metrics: an
+    action on this QueryExecution changes one or the other (AQE's
+    ``isFinalPlan``, or the scan's file and row counts)."""
+    ep = df._jdf.queryExecution().executedPlan()
+    return ep.toString() + ep.collectLeaves().head().metrics().toString()
+
+
 def test_memo_hit_and_tz_key(spark):
     """Repeat invocation reuses the memoized ANALYZED subtree (the stored
     entry is the same object) while every call returns a FRESH Dataset
     wrapper — an executed instance must never leak its post-execution
-    AQE plan to later plan-shape observers (the r15 in-suite hygiene
-    failures). A session-TZ flip (the hostile sweep's move) must MISS
-    the memo and build fresh, then hit again after restoring the zone."""
-    from etl_active911_spark.plans import cache
-
-    name = "flagship_revenue_by_nation"
+    plan to another caller (the r15 in-suite hygiene failures). A
+    session-TZ flip (the hostile sweep's move) must MISS the memo and
+    build fresh, then hit again after restoring the zone. Checked for a
+    registry-wrapped query and for the shared alert fixture plan."""
     import os
+
+    from etl_active911_spark.pipeline.fixtures import synthetic_alerts
 
     app_id = spark.sparkContext.applicationId
     sf_abs = os.path.abspath(SF_SMOKE)
+    flagship = registry.QUERIES["flagship_revenue_by_nation"]
+    cases = {
+        "q.flagship_revenue_by_nation": lambda: flagship(spark, SF_SMOKE),
+        "fixtures.synthetic_alerts": lambda: synthetic_alerts(spark, SF_SMOKE),
+    }
 
-    def stored(tz):
+    def stored(memo_name, tz):
         # Filter on the FULL memo key (app id + sf_dir, not just name+tz):
         # in suite order, other tests legitimately add entries for other
         # sf_dirs and for restarted SparkContexts — matching on name+tz
-        # alone made this test order-dependent (seen green in isolation,
-        # red in the full r15 suite).
+        # alone made this test order-dependent.
         return [
             v[1]
             for k, v in cache._QPLAN_MEMO.items()
-            if k[0] == "q." + name and k[1] == app_id and k[2] == sf_abs and k[3] == tz
+            if k[0] == memo_name and k[1] == app_id and k[2] == sf_abs and k[3] == tz
         ]
 
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    a = registry.QUERIES[name](spark, SF_SMOKE)
-    (sa,) = stored(prev)
-    b = registry.QUERIES[name](spark, SF_SMOKE)
-    (sb,) = stored(prev)
-    assert sa is sb, "second call must HIT the memo (same stored subtree)"
-    assert a is not b, "each call must return a fresh wrapper (plan hygiene)"
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-        registry.QUERIES[name](spark, SF_SMOKE)
-        (sc,) = stored("Asia/Tokyo")
-        assert sc is not sa, "TZ flip must not serve the UTC-built plan"
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
-    registry.QUERIES[name](spark, SF_SMOKE)
-    (sd,) = stored(prev)
-    assert sd is sa, "restored zone must hit the original entry"
+    for memo_name, call in cases.items():
+        prev = spark.conf.get("spark.sql.session.timeZone")
+        a = call()
+        (sa,) = stored(memo_name, prev)
+        b = call()
+        (sb,) = stored(memo_name, prev)
+        assert sa is sb, f"{memo_name}: second call must HIT the memo (same stored subtree)"
+        assert a is not b, f"{memo_name}: each call must return a fresh wrapper"
+        before = _executed(b)
+        a.collect()
+        assert _executed(b) == before, f"{memo_name}: executing one wrapper changed another"
+        try:
+            spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+            call()
+            (sc,) = stored(memo_name, "Asia/Tokyo")
+            assert sc is not sa, f"{memo_name}: TZ flip must not serve the UTC-built plan"
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", prev)
+        call()
+        (sd,) = stored(memo_name, prev)
+        assert sd is sa, f"{memo_name}: restored zone must hit the original entry"
 
 
 def test_memoized_plan_stays_initial_after_execution(spark):
@@ -134,3 +152,35 @@ def test_fingerprint_covers_every_table(tmp_path):
     os.utime(tmp_path / "nation.parquet", (0, 0))
     fp2 = cache._fixture_fingerprint(str(tmp_path), "*")
     assert fp1 != fp2
+
+
+def test_fixture_memo_rewrite_invalidates_and_releases(spark, tmp_path):
+    """Rewriting the fixture under a live ``fixture_memo`` entry must
+    rebuild it — the shared pair graph then holds the NEW pairs — and
+    release the stale entry's checkpoint blocks."""
+    from etl_active911_spark.operators.dedup import shared_verified_pairs
+
+    words = [" ".join(f"{tag}{i}" for i in range(12)) for tag in ("ka", "lo", "mu", "ne")]
+
+    def write(texts):
+        docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id long, text string")
+        docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+    def pairs(df):
+        return {(r["doc_a"], r["doc_b"]) for r in df.select("doc_a", "doc_b").collect()}
+
+    def persistent_rdds():
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    write([words[0], words[0], words[1], words[2]])
+    first = shared_verified_pairs(spark, str(tmp_path))
+    assert pairs(first) == {(1, 2)}
+    assert shared_verified_pairs(spark, str(tmp_path)) is first, "unchanged fixture must hit"
+    rdd_id = first._jdf.queryExecution().logical().rdd().id()
+    assert rdd_id in persistent_rdds()
+
+    write([words[0], words[1], words[3], words[3]])
+    second = shared_verified_pairs(spark, str(tmp_path))
+    assert second is not first
+    assert pairs(second) == {(3, 4)}
+    assert rdd_id not in persistent_rdds(), "stale entry's checkpoint blocks still pinned"

@@ -81,6 +81,9 @@ def test_driver_gate_selects_contract_modules():
         "test_plan_memo_wrap.py",
         "test_registry_order.py",
         "test_bench_contract.py",
+        "test_active911.py",
+        "test_source.py",
+        "test_http_transport.py",
     }
     assert required <= c.GATE_MODULES
     for name in c.GATE_MODULES:
@@ -88,7 +91,7 @@ def test_driver_gate_selects_contract_modules():
 
 
 def test_named_test_file_runs_in_full():
-    """`pytest tests/test_active911.py` must run that file, not
+    """`pytest tests/test_streaming.py` must run that file, not
     deselect it silently. A run naming only files outside the gate (also
     as node ids) is targeted and runs them in full; a directory, no
     path, or any gate module among the named files (`pytest
@@ -98,17 +101,17 @@ def test_named_test_file_runs_in_full():
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     named = c.named_files(
-        ["tests/test_active911.py::test_feature_shape_and_remarks_whitespace", "tests", "tests/nope.py"],
+        ["tests/test_threshold_sweep.py::test_threshold_sweep_graded_pairs", "tests", "tests/nope.py"],
         root,
     )
-    assert named == {os.path.realpath(os.path.join(root, "tests", "test_active911.py"))}
-    assert c.is_targeted(["tests/test_active911.py"], root)
-    assert c.is_targeted(["tests/test_active911.py::test_feature_shape_and_remarks_whitespace",
-                          "tests/test_source.py"], root)
+    assert named == {os.path.realpath(os.path.join(root, "tests", "test_threshold_sweep.py"))}
+    assert c.is_targeted(["tests/test_streaming.py"], root)
+    assert c.is_targeted(["tests/test_threshold_sweep.py::test_threshold_sweep_graded_pairs",
+                          "tests/test_streaming.py"], root)
     assert not c.is_targeted([], root)
     assert not c.is_targeted(["tests"], root)
-    assert not c.is_targeted(["tests", "tests/test_active911.py"], root)
-    assert not c.is_targeted(["tests/test_active911.py", "tests/test_plan_hygiene.py"], root)
+    assert not c.is_targeted(["tests", "tests/test_streaming.py"], root)
+    assert not c.is_targeted(["tests/test_streaming.py", "tests/test_plan_hygiene.py"], root)
     every_module = sorted(
         os.path.join("tests", f) for f in os.listdir(os.path.join(root, "tests"))
         if f.startswith("test_") and f.endswith(".py")

@@ -8,7 +8,6 @@ jac = 0.9 (knife-edge equality with the 0.9 threshold literal),
 0.7, 0.55, and 0.45 (below the 0.5 floor, never counted).
 """
 
-from etl_active911_spark.operators.dedup import clear_pairs_memo
 from etl_active911_spark.plans import registry
 from etl_active911_spark.plans.cache import clear_fixture_memos
 
@@ -27,7 +26,6 @@ def _pair(base: str, a_id: int, b_id: int, s: int, x: int, y: int):
 
 def test_threshold_sweep_graded_pairs(spark, tmp_path):
     clear_fixture_memos()
-    clear_pairs_memo()
     rows = (
         _pair("p1", 1, 2, 38, 2, 2)      # jac = 36/40  = 0.9
         + _pair("p2", 3, 4, 16, 3, 3)    # jac = 14/20  = 0.7
