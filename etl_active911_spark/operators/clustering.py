@@ -53,6 +53,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    checkpoints = [edges]
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -78,6 +79,7 @@ def connected_components(
         if (it + 1) % 3 == 0:
             # truncate lineage: each iteration stacks a join on the last
             new_labels = new_labels.localCheckpoint(eager=False)
+            checkpoints.append(new_labels)
         new_labels = new_labels.persist()
         changed = (
             new_labels.alias("n")
@@ -98,8 +100,9 @@ def connected_components(
             "would silently split clusters"
         )
     # the loop unpersists intermediates; register the surviving final
-    # labels so repeat invocations can't accumulate CacheManager entries
-    return scoped_register("connected_components.labels", labels)
+    # labels, and the checkpoints their lineage reads, so repeat
+    # invocations can't accumulate cache entries or checkpoint blocks
+    return scoped_register("connected_components.labels", labels, tuple(checkpoints))
 
 
 def _dup_clusters_oracle() -> str:

@@ -17,6 +17,8 @@ structs) — not the wide alert rows, which are re-joined by id afterwards.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -114,6 +116,25 @@ def resolve_coordinates(alerts: DataFrame) -> DataFrame:
 
     Emits ``lon_d``/``lat_d`` double columns next to the original strings.
     """
+    # One filter + one select (not chained withColumns): every chained
+    # withColumn re-analyzes the whole plan driver-side — 6 passes over
+    # the fixture plan cost ~0.3 s per invocation (r14 a911 anchor
+    # attribution, BASELINE.md r14). Catalyst collapses the projections
+    # identically either way; only the build cost differs.
+    keep, lon, lat = _coordinates()
+    return alerts.filter(keep).select("*", lon.alias("lon_d"), lat.alias("lat_d"))
+
+
+def _coordinates() -> tuple[Column, Column, Column]:
+    """The O-10 trees ``(keep, lon, lat)``, memoized: ``keep`` is the
+    coordinate-fallback row condition, ``lon``/``lat`` the resolved
+    doubles. Unaliased, so one plan may use them more than once."""
+    from etl_active911_spark.plans.cache import memo_cols
+
+    return memo_cols("active911.coordinates", _build_coordinates)
+
+
+def _build_coordinates() -> tuple[Column, Column, Column]:
     lon0 = js_number(F.col("lon"))
     lat0 = js_number(F.col("lat"))
     # NULL (NaN) comparisons yield NULL → coalesce to False, matching
@@ -124,16 +145,10 @@ def resolve_coordinates(alerts: DataFrame) -> DataFrame:
     place_lat = js_number(F.element_at(coords, 1))
     place_lon = js_number(F.try_element_at(coords, F.lit(2)))
     fallback_ok = (F.size(coords) == 2) & place_lat.isNotNull() & place_lon.isNotNull()
-
-    # One filter + one select (not chained withColumns): every chained
-    # withColumn re-analyzes the whole plan driver-side — 6 passes over
-    # the fixture plan cost ~0.3 s per invocation (r14 a911 anchor
-    # attribution, BASELINE.md r14). Catalyst collapses the projections
-    # identically either way; only the build cost differs.
-    return alerts.filter(~needs_fallback | fallback_ok).select(
-        "*",
-        F.when(needs_fallback, place_lon).otherwise(lon0).alias("lon_d"),
-        F.when(needs_fallback, place_lat).otherwise(lat0).alias("lat_d"),
+    return (
+        ~needs_fallback | fallback_ok,
+        F.when(needs_fallback, place_lon).otherwise(lon0),
+        F.when(needs_fallback, place_lat).otherwise(lat0),
     )
 
 
@@ -270,13 +285,8 @@ def _build_links_array(time_as_iso: bool) -> Column:
 
 def alert_start() -> Column:
     """O-15 (task.ts:215): the feature's ``start`` time, parsed from
-    ``sent``. Memoized like ``links_array_native``: building the parse
-    tree costs py4j round trips on every ``to_features`` call. The tree
-    is unresolved, so each plan still binds the session time zone at its
-    own analysis."""
-    from etl_active911_spark.plans.cache import memo_cols
-
-    return memo_cols("active911.start", lambda: parse_alert_time(F.col("sent")))
+    ``sent``."""
+    return parse_alert_time(F.col("sent"))
 
 
 def alert_remarks() -> Column:
@@ -290,34 +300,73 @@ def alert_remarks() -> Column:
     )
 
 
+#: Top-level fields of a GeoJSON Feature row (FEATURES_SCHEMA order).
+FEATURE_FIELDS = ("id", "type", "properties", "geometry")
+
+
+def _feature_fields(links: Column, lon: Column, lat: Column) -> list[Column]:
+    """The ``FEATURE_FIELDS`` trees, unaliased (task.ts:214-231).
+
+    The geometry carries what ``JSON.stringify`` writes for the
+    reference's ``[Number(lon), Number(lat)]``: a non-finite coordinate
+    (``Number("Infinity")``, ``"NaN"``, ``"1e400"``) becomes null, as an
+    unparseable one already is. JSON has no token for either, so a
+    feature must not carry one. ``lon_d``/``lat_d`` of
+    ``resolve_coordinates`` keep the raw doubles."""
+    finite = sys.float_info.max
+    return [
+        F.concat(F.lit("active911-"), F.col("id")),
+        F.lit("Feature"),
+        F.struct(
+            F.col("description").alias("callsign"),
+            alert_start().alias("start"),
+            links.alias("links"),
+            alert_remarks().alias("remarks"),
+        ),
+        F.struct(
+            F.lit("Point").alias("type"),
+            F.transform(
+                F.array(lon, lat), lambda v: F.when(F.abs(v) <= F.lit(finite), v)
+            ).alias("coordinates"),
+        ),
+    ]
+
+
+def _features() -> tuple[Column, list[Column]]:
+    """``(keep, fields)`` of the array-native ``to_features``, memoized:
+    the tree is fixed, and building it costs py4j round trips on every
+    call (rule 35). The tree is unresolved, so each plan still binds the
+    session time zone of the ``start`` parse at its own analysis."""
+    from etl_active911_spark.plans.cache import memo_cols
+
+    def build():
+        keep, lon, lat = _coordinates()
+        return keep, _feature_fields(links_array_native(), lon, lat)
+
+    return memo_cols("active911.features", build)
+
+
+def _named(fields: list[Column]) -> list[Column]:
+    # top-level aliases are applied per call (memo_cols alias caveat)
+    return [c.alias(n) for n, c in zip(FEATURE_FIELDS, fields)]
+
+
 def to_features(alerts: DataFrame, array_native: bool = True) -> DataFrame:
     """Full O-9…O-20 pipeline: alerts (24 string cols) → GeoJSON features
     (task.ts:214-231). Returns one row per feature, nested struct schema
     matching FIXTURES.md §A.4.
 
     ``array_native=True`` (default) computes links inside each row — the
-    whole pipeline is then one narrow stage with ZERO shuffles. The
-    explode+aggregate formulation (``array_native=False``) produces
-    identical results (asserted in tests) and exists because its exploded
-    intermediates are what the flat oracle queries check.
+    whole pipeline is then one filter and one select over memoized Column
+    trees, one narrow stage with ZERO shuffles. The explode+aggregate
+    formulation (``array_native=False``) produces identical results
+    (asserted in tests) and exists because its exploded intermediates are
+    what the flat oracle queries check.
     """
-    resolved = resolve_coordinates(alerts)
     if array_native:
-        with_links = resolved.withColumn("links", links_array_native())
-        return with_links.select(
-            F.concat(F.lit("active911-"), F.col("id")).alias("id"),
-            F.lit("Feature").alias("type"),
-            F.struct(
-                F.col("description").alias("callsign"),
-                alert_start().alias("start"),
-                F.col("links"),
-                alert_remarks().alias("remarks"),
-            ).alias("properties"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(F.col("lon_d"), F.col("lat_d")).alias("coordinates"),
-            ).alias("geometry"),
-        )
+        keep, fields = _features()
+        return alerts.filter(keep).select(*_named(fields))
+    resolved = resolve_coordinates(alerts)
     links = links_array(dedupe_links(extract_responses(alerts)))
     with_links = resolved.join(links, "id", "left").withColumn(
         "links",
@@ -329,16 +378,5 @@ def to_features(alerts: DataFrame, array_native: bool = True) -> DataFrame:
         ),
     )
     return with_links.select(
-        F.concat(F.lit("active911-"), F.col("id")).alias("id"),
-        F.lit("Feature").alias("type"),
-        F.struct(
-            F.col("description").alias("callsign"),
-            alert_start().alias("start"),
-            F.col("links"),
-            alert_remarks().alias("remarks"),
-        ).alias("properties"),
-        F.struct(
-            F.lit("Point").alias("type"),
-            F.array(F.col("lon_d"), F.col("lat_d")).alias("coordinates"),
-        ).alias("geometry"),
+        *_named(_feature_fields(F.col("links"), F.col("lon_d"), F.col("lat_d")))
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _LIVE: dict[str, DataFrame] = {}
+_LIVE_CHECKPOINTS: dict[str, tuple[DataFrame, ...]] = {}
 
 
 def scoped_persist(key: str, df: DataFrame) -> DataFrame:
@@ -33,27 +34,39 @@ def scoped_persist(key: str, df: DataFrame) -> DataFrame:
     return scoped_register(key, df.persist())
 
 
-def scoped_register(key: str, df: DataFrame) -> DataFrame:
+def scoped_register(
+    key: str, df: DataFrame, checkpoints: tuple[DataFrame, ...] = ()
+) -> DataFrame:
     """Track an ALREADY-persisted DataFrame under ``key`` (e.g. the final
     labels of an iterative loop that manages its own per-iteration
     persist/unpersist): the previous holder of the key is unpersisted, so
     repeat invocations cannot accumulate CacheManager entries.
 
-    SEQUENTIAL-EVALUATION ASSUMPTION (ADVICE r04): for a
-    ``localCheckpoint``-ed DataFrame, unpersisting deletes the only copy
-    of the data — there is no lineage to recompute. A reference to the
-    PREVIOUS holder that is re-collected AFTER a later call registered a
-    new one fails with 'checkpoint block not found' instead of
-    recomputing. That is safe under the engine's build-then-evaluate
-    usage (the driver sweep and the parity replica evaluate each query's
-    result before building the next), and deliberate: keeping dead
-    checkpoint blocks alive is exactly the unbounded growth this module
-    exists to prevent. Callers that need a returned plan to outlive the
-    next invocation must re-persist a plain copy themselves."""
+    ``checkpoints`` are the ``localCheckpoint``-ed frames the lineage of
+    ``df`` may still read (an iterative loop's edge list and label
+    checkpoints). ``Dataset.unpersist`` cannot free their blocks, which sit
+    on the RDD under each LogicalRDD leaf, so they are released with
+    ``_release(..., checkpointed=True)`` when the next holder of ``key``
+    registers.
+
+    SEQUENTIAL-EVALUATION ASSUMPTION (ADVICE r04): a checkpoint has no
+    lineage to recompute from. A reference to the PREVIOUS holder that is
+    re-collected AFTER a later call registered a new one fails with
+    'checkpoint block not found' instead of recomputing. That is safe
+    under the engine's build-then-evaluate usage (the driver sweep and
+    the parity replica evaluate each query's result before building the
+    next), and deliberate: keeping dead checkpoint blocks alive is exactly
+    the unbounded growth this module exists to prevent. Callers that need
+    a returned plan to outlive the next invocation must re-persist a
+    plain copy themselves."""
     prev = _LIVE.pop(key, None)
     if prev is not None and prev is not df:
         _release(prev)
+    for cp in _LIVE_CHECKPOINTS.pop(key, ()):
+        _release(cp, checkpointed=True)
     _LIVE[key] = df
+    if checkpoints:
+        _LIVE_CHECKPOINTS[key] = tuple(checkpoints)
     return df
 
 

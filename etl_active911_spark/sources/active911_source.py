@@ -212,7 +212,7 @@ class Active911StreamReader:
     invocation model (task.ts:81 Schedule + the overlapping 6-hour window,
     task.ts:134-135). Because windows overlap, consecutive batches
     re-emit alerts; the consumer dedups them by id (the control stream
-    runs ``dropDuplicates(["id"])`` on each batch).
+    keeps the first occurrence of each feature id in every pull).
 
     The offset is the pull counter; ``max_pulls`` bounds the fixture
     stream so AvailableNow terminates. Spark starts a fresh Python process

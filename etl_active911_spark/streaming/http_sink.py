@@ -2,57 +2,59 @@
 (task.ts:238): each run POSTs the transformed features to the ETL API as a
 GeoJSON FeatureCollection.
 
-Spark-first shape: a ``foreachBatch`` function whose batch body posts
-per-PARTITION chunks from the executors (``foreachPartition``) — the
-feature rows are never collected to the driver, and each POST carries at
-most ``max_features_per_post`` features. The reference submits one
-FeatureCollection per scheduled run; at scale that single POST becomes the
-bottleneck, so the sink shards it while keeping the same payload contract.
+One serializer: every feature is written to JSON in the JVM
+(``to_json`` with ``JSON_OPTIONS``, so nulls stay and timestamps are the
+reference's UTC ISO strings), and ``post_feature_collection`` joins the
+pre-serialized strings into one body. Two callers:
+
+- ``http_sink_foreach_batch`` (``submit_features``, ``run_to_http``):
+  batches that live on the executors POST per-PARTITION chunks from there
+  (``foreachPartition``), never collected to the driver;
+- the control stream (``streaming/jobs.run_control_stream``): a pull is
+  already on the driver, so it collects the strings and POSTs from there.
+
+Each POST carries at most ``max_features_per_post`` features. The
+reference submits one FeatureCollection per scheduled run; at scale that
+single POST becomes the bottleneck, so the sink shards it while keeping
+the same payload contract.
 
 Stdlib urllib only; tests drive it against a loopback http.server.
 """
 
 from __future__ import annotations
 
-import json
+import itertools
 import urllib.request
-from typing import Callable, Iterable, Iterator
+from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-
-def _jsonable(v):
-    # timestamps → reference ISO-8601 UTC strings (moment toISOString)
-    import datetime as dt
-
-    if isinstance(v, dt.datetime):
-        return v.strftime("%Y-%m-%dT%H:%M:%S.") + f"{v.microsecond // 1000:03d}Z"
-    if isinstance(v, Row):
-        return {k: _jsonable(x) for k, x in v.asDict().items()}
-    if isinstance(v, list):
-        return [_jsonable(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _jsonable(x) for k, x in v.items()}
-    return v
+#: ``to_json`` options for the reference's wire form (task.ts:214-231):
+#: null fields are written, not dropped, and timestamps are moment
+#: ``toISOString`` strings whatever the session time zone.
+JSON_OPTIONS = {
+    "ignoreNullFields": "false",
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+    "timeZone": "UTC",
+}
 
 
-def row_to_feature(row: Row) -> dict:
-    """A features-DF row (pipeline/active911.FEATURES_SCHEMA) → GeoJSON
-    Feature dict in the reference's exact shape (task.ts:214-231)."""
-    return _jsonable(row)
+def json_column() -> Column:
+    """Each row, all of its columns, as one JSON object string."""
+    return F.to_json(F.struct("*"), JSON_OPTIONS)
 
 
 def post_feature_collection(
-    url: str, features: list[dict], timeout: float = 30.0
+    url: str, json_parts: list[str], timeout: float = 30.0
 ) -> int:
-    """POST one {type: FeatureCollection, features: [...]} body; returns
-    the HTTP status. Raises on transport errors (caller isolates)."""
-    body = json.dumps({"type": "FeatureCollection", "features": features}).encode(
-        "utf-8"
-    )
+    """POST one {type: FeatureCollection, features: [...]} body built from
+    pre-serialized feature objects; returns the HTTP status. Raises on
+    transport errors (caller isolates)."""
+    body = '{"type": "FeatureCollection", "features": [' + ", ".join(json_parts) + "]}"
     req = urllib.request.Request(
         url,
-        data=body,
+        data=body.encode("utf-8"),
         method="POST",
         headers={"Content-Type": "application/json"},
     )
@@ -60,15 +62,13 @@ def post_feature_collection(
         return resp.status
 
 
-def _post_rows(url: str, rows: Iterator[Row], chunk: int, timeout: float) -> None:
-    buf: list[dict] = []
-    for row in rows:
-        buf.append(row_to_feature(row))
-        if len(buf) >= chunk:
-            post_feature_collection(url, buf, timeout)
-            buf = []
-    if buf:
-        post_feature_collection(url, buf, timeout)
+def post_in_chunks(
+    url: str, json_parts: Iterable[str], chunk: int, timeout: float = 30.0
+) -> None:
+    """POST ``json_parts`` as FeatureCollections of at most ``chunk``."""
+    it = iter(json_parts)
+    while part := list(itertools.islice(it, chunk)):
+        post_feature_collection(url, part, timeout)
 
 
 def http_sink_foreach_batch(
@@ -79,8 +79,10 @@ def http_sink_foreach_batch(
     (``fn(df, 0)``) — same duality as the windowing transforms."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.foreachPartition(
-            lambda rows: _post_rows(url, rows, max_features_per_post, timeout)
+        batch_df.select(json_column()).foreachPartition(
+            lambda rows: post_in_chunks(
+                url, (r[0] for r in rows), max_features_per_post, timeout
+            )
         )
 
     return sink

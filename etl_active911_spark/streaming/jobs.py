@@ -112,14 +112,23 @@ def run_control_stream(
     - error routing: ``_error`` rows are diverted, not fatal — task.ts:123;
     - transform: ``to_features`` (zero-shuffle array-native links);
     - dedup: overlapping pull windows re-emit alerts; stable feature ids
-      collapse them per micro-batch before the POST — the TAK sink
-      semantics of task.ts:238;
-    - sink: per-partition chunked FeatureCollection POSTs (streaming/
-      http_sink.py), batch-atomic via foreachBatch.
+      collapse them per micro-batch before the POST, first occurrence in
+      pull order wins — the TAK sink semantics of task.ts:238;
+    - sink: the features are serialized to JSON in the JVM and collected
+      to the driver, then POSTed in FeatureCollection chunks of
+      ``max_features_per_post`` (streaming/http_sink.py), batch-atomic via
+      foreachBatch.
+
+    The batch body runs no Spark job: a pull's Arrow table (below
+    ``spark.sql.execution.arrow.localRelationThreshold``) becomes a
+    ``LocalRelation``, so Catalyst folds the filter and the projection
+    into a ``LocalTableScan`` at optimization, and ``collect`` reads it
+    on the driver. A shuffle (``dropDuplicates``) or an executor sink
+    would each cost a job per pull.
     """
     from etl_active911_spark.pipeline.active911 import to_features
     from etl_active911_spark.sources import active911_source as src
-    from etl_active911_spark.streaming.http_sink import http_sink_foreach_batch
+    from etl_active911_spark.streaming.http_sink import json_column, post_in_chunks
 
     # registered for the session's `format("active911")` readers; the
     # control stream itself does not go through the data source
@@ -127,16 +136,17 @@ def run_control_stream(
     options = dict(source_options or {})
     reader = src.Active911Reader(options)
     max_pulls = int(options.get("max_pulls", src.MAX_PULLS))
-    post = http_sink_foreach_batch(submit_url, max_features_per_post)
 
     def sink(ticks: DataFrame, batch_id: int) -> None:
         if batch_id >= max_pulls:
             return
         table = src.alerts_table(reader.pull())
         alerts = ticks.sparkSession.createDataFrame(table, src.SOURCE_SCHEMA)
-        good = alerts.filter(F.col("_error").isNull())
-        features = to_features(good.drop("agency_id", "_error")).dropDuplicates(["id"])
-        post(features, batch_id)
+        features = to_features(alerts.filter(F.col("_error").isNull()))
+        first: dict[str, str] = {}
+        for fid, feature in features.select("id", json_column()).collect():
+            first.setdefault(fid, feature)
+        post_in_chunks(submit_url, first.values(), max_features_per_post)
 
     query = (
         spark.readStream.format("rate-micro-batch")

@@ -302,6 +302,32 @@ def test_array_native_equals_explode_formulation(spark):
     assert canon(a) == canon(b)
 
 
+def test_memoized_features_reused_twice_in_one_plan(spark, monkeypatch):
+    """``to_features`` reuses one memoized Column tree per session, so a
+    plan that calls it twice (a union, a join on id) holds the same tree
+    twice. Both plans must resolve and equal the plans built from fresh,
+    unmemoized trees."""
+    from etl_active911_spark.pipeline import active911
+    from etl_active911_spark.pipeline.fixtures import synthetic_alerts
+    from etl_active911_spark.plans import cache
+    from tests.conftest import SF_SMOKE
+
+    alerts = synthetic_alerts(spark, SF_SMOKE).limit(100)
+    canon = lambda rows: sorted(repr(r) for r in rows)  # noqa: E731
+
+    def results():
+        a, b = to_features(alerts), to_features(alerts)
+        joined = a.join(b.select("id", F.col("properties").alias("p2"), F.col("geometry").alias("g2")), "id")
+        return canon(a.union(b).collect()), canon(joined.collect())
+
+    assert active911._features() is active911._features()
+    union, joined = results()
+    assert len(union) == 2 * len(joined) > 0
+    monkeypatch.setattr(cache, "memo_cols", lambda key, builder: builder())
+    assert active911._features() is not active911._features()
+    assert results() == (union, joined)
+
+
 def test_schema_discovery_matches_actual_output(spark):
     """Entry point 3 (task.ts:83-96): the declared output schema must equal
     the schema the transform actually produces (the 'catalog' contract)."""

@@ -364,3 +364,165 @@ def test_control_stream_payloads_tz_invariant(spark, submit_server, tmp_path):
         b'\\n                            ", '
         b'"start": "2025-12-09T01:27:47.000Z"}, "type": "Feature"}'
     )
+
+
+def _reject_constant(token: str):
+    raise ValueError(f"non-JSON number token {token!r} in a POSTed body")
+
+
+def _render_feature(v):
+    """Independent Python rendering of a ``to_features`` row as the
+    reference's ``JSON.stringify`` writes it (task.ts:214-238): rows
+    become objects, timestamps moment ``toISOString`` UTC strings,
+    non-finite numbers null."""
+    import datetime as dt
+    import math
+
+    from pyspark.sql import Row
+
+    if isinstance(v, dt.datetime):
+        # collect() yields naive local-time datetimes
+        v = v.astimezone(dt.timezone.utc)
+        return v.strftime("%Y-%m-%dT%H:%M:%S.") + f"{v.microsecond // 1000:03d}Z"
+    if isinstance(v, float) and not math.isfinite(v):
+        return None
+    if isinstance(v, Row):
+        return {k: _render_feature(x) for k, x in v.asDict().items()}
+    if isinstance(v, list):
+        return [_render_feature(x) for x in v]
+    return v
+
+
+#: Hostile alerts for the payload tests: (agency, alert). ``h-dup`` comes
+#: twice in one pull, under two agencies, with different fields.
+_HOSTILE = [
+    (1, {"id": "h-null", "sent": None, "responses": None, "lat": "39.7", "lon": "-104.9"}),
+    (1, {"id": "h-empty", "sent": "", "responses": "", "lat": "39.7", "lon": "-104.9"}),
+    (1, {
+        "id": "h-uni", "sent": "12/08/2025 18:27:47 MST",
+        "description": "Feu de forêt ☃ 🚒", "units": "Ünïts E1", "source": "CAD \"q\" \\",
+        "details": "naïve\ttab\x01ctl",
+        "responses": "Got a response of Réspond ☃ to Nïck(123) at 12/08/2025 18:28:20 MST.",
+        "lat": "-4.9e-324", "lon": "1.7976931348623157e308",
+    }),
+    (1, {"id": "h-inf", "sent": "12/08/2025 18:27:47 MST", "lat": "NaN", "lon": "Infinity"}),
+    (1, {"id": "h-big", "sent": "12/08/2025 18:27:47 MST", "lat": "-Infinity", "lon": "1e400"}),
+    (1, {"id": "h-dup", "description": "first", "lat": "40.1", "lon": "-105.2"}),
+    (2, {"id": "h-dup", "description": "second", "lat": "41.5", "lon": "-106.5"}),
+]
+
+
+def _hostile_alerts(spark):
+    from etl_active911_spark.pipeline.active911 import ALERT_COLUMNS, ALERTS_SCHEMA
+
+    rows = [tuple(a.get(c, "") for c in ALERT_COLUMNS) for _, a in _HOSTILE]
+    return spark.createDataFrame(rows, ALERTS_SCHEMA)
+
+
+def _posted(srv) -> list[dict]:
+    return [
+        f
+        for body in srv.raw_posts
+        for f in json.loads(body, parse_constant=_reject_constant)["features"]
+    ]
+
+
+def _check_hostile_payload(posted: list[dict], expected: list[dict]) -> None:
+    key = lambda f: json.dumps(f, sort_keys=True)  # noqa: E731
+    assert sorted(map(key, posted)) == sorted(map(key, expected))
+    by_id = {f["id"]: f for f in posted}
+    # JSON.stringify writes non-finite coordinates as null
+    assert by_id["active911-h-inf"]["geometry"]["coordinates"] == [None, None]
+    assert by_id["active911-h-big"]["geometry"]["coordinates"] == [None, None]
+    assert by_id["active911-h-uni"]["geometry"]["coordinates"] == [1.7976931348623157e308, -5e-324]
+    assert by_id["active911-h-null"]["properties"]["start"] is None
+    assert by_id["active911-h-null"]["properties"]["links"] == []
+    assert by_id["active911-h-empty"]["properties"]["links"] == []
+    [link] = by_id["active911-h-uni"]["properties"]["links"]
+    assert link["remarks"] == "Réspond ☃" and link["callsign"] == "Nïck"
+
+
+def test_submit_features_hostile_payload(spark, submit_server):
+    """The executor path writes every hostile row exactly as the Python
+    rendering of its ``to_features`` row: NULL and empty ``sent`` and
+    ``responses``, unicode and control characters, extreme finite and
+    non-finite coordinates. Every body is strict JSON."""
+    from etl_active911_spark.pipeline.active911 import to_features
+    from etl_active911_spark.streaming.http_sink import submit_features
+
+    srv, url = submit_server
+    features = to_features(_hostile_alerts(spark))
+    submit_features(features, url, max_features_per_post=3)
+    posted = _posted(srv)
+    _check_hostile_payload(posted, [_render_feature(r) for r in features.collect()])
+    assert sorted(f["id"] for f in posted).count("active911-h-dup") == 2
+
+
+def test_control_stream_hostile_payload(spark, submit_server, tmp_path):
+    """The driver path POSTs each feature once, first occurrence in pull
+    order winning (``h-dup`` keeps agency 1's fields), and writes it as the
+    Python rendering of its ``to_features`` row. The wire has no NULL, so
+    the NULL fields arrive as empty strings."""
+    from etl_active911_spark.pipeline.active911 import to_features
+    from etl_active911_spark.sources.active911_source import register
+    from etl_active911_spark.streaming.jobs import run_control_stream
+
+    d = tmp_path / "wire"
+    d.mkdir()
+    for agency in (1, 2):
+        rows = [a for ag, a in _HOSTILE if ag == agency]
+        (d / f"agency_{agency}.jsonp").write_text(encode_wire_payload(rows), encoding="utf-8")
+
+    srv, url = submit_server
+    run_control_stream(
+        spark,
+        url,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        source_options={"fixture_dir": str(d), "max_pulls": "1"},
+        max_features_per_post=2,
+    )
+    register(spark)
+    pulled = spark.read.format("active911").option("fixture_dir", str(d)).load()
+    first: dict[str, dict] = {}
+    for r in to_features(pulled.filter("_error IS NULL")).collect():
+        first.setdefault(r["id"], _render_feature(r))
+    posted = _posted(srv)
+    _check_hostile_payload(posted, list(first.values()))
+    assert len(srv.raw_posts) == 3
+    dup = next(f for f in posted if f["id"] == "active911-h-dup")
+    assert dup["properties"]["callsign"] == "first"
+    assert dup["geometry"]["coordinates"] == [-105.2, 40.1]
+
+
+def test_control_stream_pull_runs_no_spark_job(spark, submit_server, tmp_path):
+    """A pull is a ``LocalRelation`` on the driver: the transform folds
+    into it at optimization and the features are collected and POSTed from
+    the driver, so a whole ``max_pulls=1`` run starts no Spark job (a
+    ``dropDuplicates`` shuffle plus an executor POST cost two)."""
+    from etl_active911_spark.streaming.jobs import run_control_stream
+    from tests.test_source import ALERT
+
+    d = tmp_path / "wire"
+    d.mkdir()
+    (d / "agency_1.jsonp").write_text(encode_wire_payload([ALERT, {**ALERT, "id": "43"}]))
+    (d / "agency_2.jsonp").write_text(encode_wire_payload([ALERT]))
+
+    sc = spark.sparkContext
+
+    def newest_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    srv, url = submit_server
+    spark.range(1).collect()  # a job to bracket against
+    before = newest_job()
+    query = run_control_stream(
+        spark,
+        url,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        source_options={"fixture_dir": str(d), "max_pulls": "1"},
+    )
+    assert newest_job() == before
+    assert sc.statusTracker().getJobIdsForGroup(str(query.runId)) == []
+    assert sorted(f["id"] for f in _posted(srv)) == ["active911-42", "active911-43"]

@@ -184,3 +184,22 @@ def test_fixture_memo_rewrite_invalidates_and_releases(spark, tmp_path):
     assert second is not first
     assert pairs(second) == {(3, 4)}
     assert rdd_id not in persistent_rdds(), "stale entry's checkpoint blocks still pinned"
+
+
+def test_connected_components_repeat_calls_hold_rdd_count_flat(spark):
+    """Each ``connected_components`` call checkpoints its edge list and,
+    every third iteration, its labels. The next call must release them:
+    ``Dataset.unpersist`` cannot, so before the fix every call left one
+    more checkpoint RDD pinned (2 → 3 → 4 → 5 over four calls)."""
+    from etl_active911_spark.operators.clustering import connected_components
+
+    # four 6-node paths, 20 edges: diameter 5, so the loop runs six
+    # iterations and checkpoints its labels at the third and the sixth
+    edges = [(b + i, b + i + 1) for b in (0, 10, 20, 30) for i in range(5)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    counts = []
+    for _ in range(4):
+        comp = {r["doc_id"]: r["component"] for r in connected_components(pairs).collect()}
+        assert comp == {b + i: b for b in (0, 10, 20, 30) for i in range(6)}
+        counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert counts[1:] == counts[:1] * 3, f"checkpoint RDDs accumulate: {counts}"
