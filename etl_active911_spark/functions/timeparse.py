@@ -202,15 +202,14 @@ def parse_alert_time_ntz(col: Column, now_year: int | None = None) -> Column:
     mapped zone (task.ts:70-73); otherwise parse the WHOLE string in UTC
     (task.ts:75 — moment's 'z' token is a parse no-op and the lenient
     parser skips a trailing unknown token as junk anyway). The trimmed
-    input and the zone lookup are each bound once."""
+    input and the zone lookup are each bound once, and so is the lenient
+    parse: a row without a known zone converts UTC → UTC, the identity."""
 
     def dispatch(s: Column) -> Column:
         def in_zone(tz: Column) -> Column:
             date_part = F.trim(F.regexp_replace(s, r"\s*\S+$", ""))
-            return F.when(
-                tz.isNotNull(),
-                F.convert_timezone(tz, F.lit("UTC"), _lenient_wall(date_part, now_year)),
-            ).otherwise(_lenient_wall(s, now_year))
+            wall = _lenient_wall(F.when(tz.isNotNull(), date_part).otherwise(s), now_year)
+            return F.convert_timezone(F.coalesce(tz, F.lit("UTC")), F.lit("UTC"), wall)
 
         return let(F.try_element_at(_tz_map_lit(), F.regexp_extract(s, r"(\S+)$", 1)), in_zone)
 

@@ -1,9 +1,11 @@
 """Fixture-table readers (SURVEY.md §2.1 O-8).
 
-Schemas are declared, never inferred (reference declares all schemas up
-front, task.ts:18-43); parquet footers carry them so ``spark.read.parquet``
-is already schema-stable. Filters/projections applied by callers reach the
-scan via Catalyst pushdown — do not pre-materialize.
+Schemas are inferred from the parquet footer, not declared: every
+``read_table`` call reads the footer again, which costs one Spark job
+while the query is still being built. The footer carries the fixture's
+physical types, so the inferred schema is stable for a given file.
+Filters/projections applied by callers reach the scan via Catalyst
+pushdown — do not pre-materialize.
 """
 
 from __future__ import annotations

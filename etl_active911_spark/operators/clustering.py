@@ -164,7 +164,11 @@ def x2_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def connected_components_star(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b", max_iter: int = 20
+    pairs: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    max_iter: int = 20,
+    key: str = "connected_components_star",
 ) -> DataFrame:
     """(a, b) edge list → (doc_id, component) via the alternating
     large-star/small-star algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi
@@ -226,6 +230,11 @@ def connected_components_star(
     would pay on graphs with MANY rounds (per-round work tracking a
     shrinking frontier at 100 TB); revisit only with a high-diameter
     workload that actually runs >3 rounds.
+
+    The edge-list and per-round ``stars`` checkpoints are registered
+    under ``key`` (``scoped_register``): the next call with the same key
+    frees them. Two calls whose results one query reads together need
+    distinct keys, or the second frees the first's blocks.
     """
     sym = (
         pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
@@ -235,6 +244,7 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     edges = sym  # invariant: symmetric, no self-loops
+    checkpoints = [sym]
 
     # Star steps as ONE window pass each (r7): the groupBy(u).min + join-
     # back-on-u shape costs two exchanges and a join per step; a window
@@ -289,6 +299,7 @@ def connected_components_star(
         stars = _small_star(_resym(_large_star(edges)))  # directed child → parent
         stars = _small_star(_resym(_large_star(_resym(stars))))
         stars = stars.distinct().localCheckpoint(eager=True)
+        checkpoints.append(stars)
         # both convergence probes in ONE keyed aggregate job (r7: was a
         # semi-join probe + a count probe = two jobs per round; the loop's
         # cost is dominated by per-job fixed overhead on these small edge
@@ -317,7 +328,7 @@ def connected_components_star(
                 .distinct()
                 .withColumn("component", F.col("doc_id"))
             )
-            return comp.union(roots)
+            return scoped_register(key, comp.union(roots), tuple(checkpoints))
         edges = _resym(stars).distinct()
     raise RuntimeError(
         f"connected_components_star did not converge in {max_iter} rounds "
@@ -336,7 +347,7 @@ def x2_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_active911_spark.operators.dedup import shared_verified_pairs
 
     pairs = shared_verified_pairs(spark, sf_dir)
-    comp = connected_components_star(pairs)
+    comp = connected_components_star(pairs, key="x2_dup_clusters_star")
     keepers = comp.groupBy("component").agg(F.min("doc_id").alias("keeper_id"))
     return (
         comp.join(keepers, "component")
@@ -944,7 +955,7 @@ def overmerge_audit_rows(pairs: DataFrame, comp: DataFrame | None = None) -> Dat
     O(log n)-for-any-graph engine is the only safe default (ADVICE r11
     item 2)."""
     if comp is None:
-        comp = connected_components_star(pairs)
+        comp = connected_components_star(pairs, key="overmerge_audit")
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
     ce = pairs.join(
         comp.withColumnRenamed("doc_id", "doc_a"), "doc_a"
@@ -1105,12 +1116,12 @@ def cluster_drift_rows(
     pinned on crafted graphs in pytest. ``fcomp`` lets the registered
     query pass the memoized full labels."""
     if fcomp is None:
-        fcomp = connected_components_star(pairs)
+        fcomp = connected_components_star(pairs, key="cluster_drift.full")
     is_delta_expr = F.col("doc_id") % delta_mod == 0
     base_pairs = pairs.filter(
         (F.col("doc_a") % delta_mod != 0) & (F.col("doc_b") % delta_mod != 0)
     )
-    bcomp = connected_components_star(base_pairs).select(
+    bcomp = connected_components_star(base_pairs, key="cluster_drift.base").select(
         "doc_id", F.col("component").alias("base_component")
     )
     members = fcomp.join(bcomp, "doc_id", "left").select(

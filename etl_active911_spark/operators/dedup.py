@@ -959,7 +959,9 @@ def shared_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup.component_labels",
         spark,
         sf_dir,
-        lambda: connected_components_star(shared_verified_pairs(spark, sf_dir)),
+        lambda: connected_components_star(
+            shared_verified_pairs(spark, sf_dir), key="dedup.component_labels"
+        ),
     )
 
 
@@ -1770,7 +1772,7 @@ def x2_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_active911_spark.operators.clustering import connected_components_star
 
-    comp = connected_components_star(edges).select(
+    comp = connected_components_star(edges, key="x2_entity_resolution").select(
         F.col("doc_id").alias("nodekey"), F.col("component")
     )
     resolved = (

@@ -369,7 +369,7 @@ def _shared_incident_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         lambda: connected_components_star(
-            _shared_pair_graph(spark, sf_dir), a="id_a", b="id_b"
+            _shared_pair_graph(spark, sf_dir), a="id_a", b="id_b", key="geo.incident_labels"
         ).withColumnRenamed("doc_id", "id"),
         table="orders",
     )

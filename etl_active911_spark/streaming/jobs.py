@@ -125,6 +125,14 @@ def run_control_stream(
     into a ``LocalTableScan`` at optimization, and ``collect`` reads it
     on the driver. A shuffle (``dropDuplicates``) or an executor sink
     would each cost a job per pull.
+
+    What a run costs beyond the batch is the stream's start and stop and
+    its three checkpoint writes (``metadata``, ``offsets/0``,
+    ``commits/0``), the write-ahead logs that keep the pull index. They
+    go through the FileSystem checkpoint manager ``session.get_spark``
+    selects: without the native Hadoop library Spark's default
+    FileContext manager forks a shell for each permission and status
+    call, 71 process clones per run against 23 (4-core host).
     """
     from etl_active911_spark.pipeline.active911 import to_features
     from etl_active911_spark.sources import active911_source as src

@@ -203,3 +203,29 @@ def test_connected_components_repeat_calls_hold_rdd_count_flat(spark):
         assert comp == {b + i: b for b in (0, 10, 20, 30) for i in range(6)}
         counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
     assert counts[1:] == counts[:1] * 3, f"checkpoint RDDs accumulate: {counts}"
+
+
+def test_connected_components_star_repeat_calls_hold_rdd_count_flat(spark):
+    """``connected_components_star`` checkpoints its edge list and each
+    round's stars; the next call under the same key must release them
+    (without the release four calls read 3 → 5 → 7 → 8 pinned RDDs). Two
+    keys hold their checkpoints apart: a second-key call between the
+    calls must not free the first key's result."""
+    from etl_active911_spark.operators.clustering import connected_components_star
+
+    edges = [(b + i, b + i + 1) for b in (0, 10, 20, 30) for i in range(5)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    want = {b + i: b for b in (0, 10, 20, 30) for i in range(6)}
+
+    def comp(df):
+        return {r["doc_id"]: r["component"] for r in df.collect()}
+
+    counts = []
+    for _ in range(4):
+        assert comp(connected_components_star(pairs)) == want
+        counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert counts[1:] == counts[:1] * 3, f"checkpoint RDDs accumulate: {counts}"
+
+    held = connected_components_star(pairs, key="t.star.held")
+    assert comp(connected_components_star(pairs, key="t.star.other")) == want
+    assert comp(held) == want

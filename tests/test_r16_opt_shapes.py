@@ -58,10 +58,13 @@ def test_bigram_comb_guarded_against_empty_token_array(spark):
 
 def test_bench_disk_rows_and_io_probe():
     """r16 bench additions: the disk-row bracket names real HEADLINE
-    queries and the IO probe measures something positive."""
+    queries, adjacent so the pre-disk-rows probe brackets them all, and
+    the IO probe measures something positive."""
     import bench
 
     assert set(bench.DISK_ROWS) <= set(bench.HEADLINE)
+    at = sorted(bench.HEADLINE.index(n) for n in bench.DISK_ROWS)
+    assert at == list(range(at[0], at[0] + len(at))), f"DISK_ROWS split in HEADLINE: {at}"
     sec = bench._io_probe()
     assert 0 < sec < 60
 
