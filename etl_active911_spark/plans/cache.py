@@ -243,6 +243,60 @@ def wrap_plan_memo(name: str, fn):
     return wrapper
 
 
+_LOCAL_RELATION = "org.apache.spark.sql.catalyst.plans.logical.LocalRelation"
+_BIND_MEMO: dict[tuple, tuple] = {}
+
+
+def bind_rows(name: str, spark, rows: DataFrame, build) -> DataFrame:
+    """``build(rows)`` without building or analyzing it again: the plan
+    is analyzed once per (name, application, session timezone, schema of
+    ``rows``) over an empty frame of that schema, and each call swaps the
+    rows of ``rows`` into the leaf of that template — what Structured
+    Streaming does with a micro-batch's data (SIGMOD 2018). ``name``
+    stands for ``build``: one name, one build.
+
+    The bound plan is marked analyzed, so a call builds no Column tree
+    and runs no analyzer rule; optimization still runs on every call
+    (the ``LocalRelation`` fold, ``current_*``, time-zone rules).
+
+    Only for a ``build`` whose analyzed plan is a single-child chain over
+    its input, and only for ``rows`` already on the driver: its plan must
+    be a ``LocalRelation`` (a ``createDataFrame`` of an Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold``). Anything else
+    raises. The zone is in the key because analysis embeds it (see
+    ``plan_memo``); as there, no other conf is. Never for plans that
+    must mint fresh lineage (rule 29) or hold materialization (rule 38):
+    every call shares the template's expression ids."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    jvm = spark._jvm
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    key = (name, spark.sparkContext.applicationId, tz, rows.schema.json())
+    got = _BIND_MEMO.get(key)
+    if got is None:
+        empty = spark.createDataFrame(to_arrow_schema(rows.schema).empty_table(), rows.schema)
+        chain, node = [], build(empty)._jdf.queryExecution().analyzed()
+        while node.children().size() == 1:
+            chain.append(node)
+            node = node.children().head()
+        if node.children().size() or node.getClass().getName() != _LOCAL_RELATION:
+            raise ValueError(f"bind_rows({name!r}): the template is not one chain over a LocalRelation")
+        got = _BIND_MEMO[key] = (node.output(), chain[::-1])
+    output, chain = got
+    data = rows._jdf.queryExecution().logical()
+    if data.getClass().getName() != _LOCAL_RELATION:
+        raise ValueError(
+            f"bind_rows({name!r}): rows are a {data.getClass().getSimpleName()}, not a LocalRelation"
+        )
+    node = jvm.org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        output, data.data(), False, jvm.scala.Option.empty()
+    )
+    for parent in chain:
+        node = parent.withNewChildren(jvm.PythonUtils.toSeq([node]))
+    node.setAnalyzed()
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, node), spark)
+
+
 _COLS_MEMO: dict[tuple, object] = {}
 
 

@@ -523,6 +523,13 @@ def test_control_stream_hostile_payload(spark, submit_server, tmp_path):
     assert dup["geometry"]["coordinates"] == [-105.2, 40.1]
 
 
+def _newest_job(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
 def test_control_stream_pull_runs_no_spark_job(spark, submit_server, tmp_path):
     """A pull is a ``LocalRelation`` on the driver: the transform folds
     into it at optimization and the features are collected and POSTed from
@@ -536,22 +543,187 @@ def test_control_stream_pull_runs_no_spark_job(spark, submit_server, tmp_path):
     (d / "agency_1.jsonp").write_text(encode_wire_payload([ALERT, {**ALERT, "id": "43"}]))
     (d / "agency_2.jsonp").write_text(encode_wire_payload([ALERT]))
 
-    sc = spark.sparkContext
-
-    def newest_job() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
-        return jobs.apply(0).jobId() if jobs.size() else -1
-
     srv, url = submit_server
     spark.range(1).collect()  # a job to bracket against
-    before = newest_job()
+    before = _newest_job(spark)
     query = run_control_stream(
         spark,
         url,
         checkpoint_dir=str(tmp_path / "ckpt"),
         source_options={"fixture_dir": str(d), "max_pulls": "1"},
     )
-    assert newest_job() == before
-    assert sc.statusTracker().getJobIdsForGroup(str(query.runId)) == []
+    assert _newest_job(spark) == before
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId)) == []
     assert sorted(f["id"] for f in _posted(srv)) == ["active911-42", "active911-43"]
+
+
+def _features_json(alerts):
+    """The control stream's transform, built and analyzed from scratch."""
+    from etl_active911_spark.pipeline.active911 import to_features
+    from etl_active911_spark.streaming.http_sink import json_column
+
+    return to_features(alerts.filter(F.col("_error").isNull())).select("id", json_column())
+
+
+def _pulled_frames(spark, tmp_path) -> list:
+    """Two pull windows as the control stream hands them to the JVM:
+    agency 3 is a dead letter, and ids repeat across agencies and
+    across windows."""
+    from etl_active911_spark.sources.active911_source import (
+        SOURCE_SCHEMA,
+        Active911Reader,
+        alerts_table,
+    )
+    from tests.test_source import ALERT
+
+    frames = []
+    for w, ids in enumerate((["42", "43", "h-dup"], ["43", "44", "h-dup"])):
+        d = tmp_path / f"window_{w}"
+        d.mkdir(parents=True)
+        first = [{**ALERT, "id": i} for i in ids] + [a for ag, a in _HOSTILE if ag == 1]
+        (d / "agency_1.jsonp").write_text(encode_wire_payload(first), encoding="utf-8")
+        second = [a for ag, a in _HOSTILE if ag == 2]
+        (d / "agency_2.jsonp").write_text(encode_wire_payload(second), encoding="utf-8")
+        (d / "agency_3.jsonp").write_text(encode_error_payload("upstream failure"))
+        table = alerts_table(Active911Reader({"fixture_dir": str(d)}).pull())
+        frames.append(spark.createDataFrame(table, SOURCE_SCHEMA))
+    return frames
+
+
+def test_bind_rows_matches_unbound_transform_across_zones(spark, tmp_path):
+    """A bound pull returns exactly the (id, json) rows, in order, of
+    building and analyzing the transform again, under every session
+    zone. The zone is part of the template key: each new zone analyzes
+    its own template, and a second pull in the same zone reuses it."""
+    from etl_active911_spark.plans import cache
+
+    name = "test.bind_rows_parity"
+    zones = ["UTC", "Asia/Tokyo", "Australia/Eucla"]
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    templates = []
+    try:
+        for tz in zones:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            for alerts in _pulled_frames(spark, tmp_path / tz.replace("/", "_")):
+                bound = cache.bind_rows(name, spark, alerts, _features_json).collect()
+                assert bound == _features_json(alerts).collect()
+                ids = [r["id"] for r in bound]
+                assert ids.count("active911-h-dup") == 3  # twice from agency 1, once from 2
+                assert "active911-None" not in ids  # the dead letter is filtered
+                templates.append([k[2] for k in cache._BIND_MEMO if k[0] == name])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    assert templates == [zones[:1], zones[:1], zones[:2], zones[:2], zones, zones]
+
+
+def test_bound_pull_runs_no_analyzer_rule(spark, tmp_path):
+    """A bound pull is marked analyzed: after the template is built, its
+    query records no Analyzer rule in its planning tracker, while
+    building the transform again runs them. The Spark internals the bind
+    uses are pinned by signature, so an upgrade that moves them fails
+    here rather than in a scheduled pull."""
+    from etl_active911_spark.plans import cache
+
+    jvm = spark._jvm
+    gateway = spark.sparkContext._gateway
+
+    def cls(name: str):
+        return jvm.java.lang.Class.forName(name)
+
+    def types(*classes):
+        arr = gateway.new_array(jvm.java.lang.Class, len(classes))
+        for i, c in enumerate(classes):
+            arr[i] = c
+        return arr
+
+    logical = "org.apache.spark.sql.catalyst.plans.logical."
+    plan, seq = cls(logical + "LogicalPlan"), cls("scala.collection.immutable.Seq")
+    session = cls("org.apache.spark.sql.classic.SparkSession")
+    cls("org.apache.spark.sql.classic.Dataset").getMethod("ofRows", types(session, plan))
+    plan.getMethod("setAnalyzed", types())
+    cls(logical + "LocalRelation").getConstructor(
+        types(seq, seq, jvm.java.lang.Boolean.TYPE, cls("scala.Option"))
+    )
+
+    def analyzer_rules(df) -> list[str]:
+        df.collect()
+        names = df._jdf.queryExecution().tracker().rules().keys().mkString("\n")
+        prefix = "org.apache.spark.sql.catalyst.analysis.Analyzer$"
+        return [n for n in names.split("\n") if n.startswith(prefix)]
+
+    first, second = _pulled_frames(spark, tmp_path)
+    name = "test.bind_rows_no_analysis"
+    cache.bind_rows(name, spark, first, _features_json).collect()
+    assert analyzer_rules(cache.bind_rows(name, spark, second, _features_json)) == []
+    assert analyzer_rules(_features_json(second))
+
+
+def test_bind_rows_refuses_what_it_cannot_bind(spark, tmp_path):
+    """A template that is not one chain over its input, or rows that are
+    not a ``LocalRelation`` on the driver, raise instead of binding."""
+    from etl_active911_spark.plans import cache
+
+    [alerts, _] = _pulled_frames(spark, tmp_path)
+    with pytest.raises(ValueError, match="not one chain"):
+        cache.bind_rows("test.bind_rows_union", spark, alerts, lambda a: a.unionByName(a))
+    on_executors = spark.createDataFrame(alerts.collect(), alerts.schema)
+    with pytest.raises(ValueError, match="LogicalRDD"):
+        cache.bind_rows("test.bind_rows_rdd", spark, on_executors, _features_json)
+
+
+def test_control_stream_large_pull_binds_in_slices(spark, submit_server, tmp_path):
+    """A pull over ``spark.sql.execution.arrow.localRelationThreshold``
+    (an RDD scan if handed over whole) is bound in ordered slices under
+    it: the control stream POSTs the same bytes as under the default
+    threshold, first occurrence in pull order winning across slices, and
+    still starts no Spark job."""
+    from etl_active911_spark.sources.active911_source import (
+        SOURCE_SCHEMA,
+        Active911Reader,
+        alerts_table,
+    )
+    from etl_active911_spark.streaming.jobs import run_control_stream
+    from tests.test_source import ALERT
+
+    d = tmp_path / "wire"
+    d.mkdir()
+    (d / "agency_1.jsonp").write_text(
+        encode_wire_payload([{**ALERT, "id": str(i)} for i in range(30)])
+    )
+    (d / "agency_2.jsonp").write_text(
+        encode_wire_payload([{**ALERT, "id": str(i), "description": "second"} for i in range(20, 50)])
+    )
+    (d / "agency_3.jsonp").write_text(encode_error_payload("upstream failure"))
+    srv, url = submit_server
+
+    def one_run(tag: str) -> list[bytes]:
+        srv.posts.clear()
+        srv.raw_posts.clear()
+        run_control_stream(
+            spark,
+            url,
+            checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+            source_options={"fixture_dir": str(d), "max_pulls": "1"},
+        )
+        return list(srv.raw_posts)
+
+    base = one_run("default")
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(4 * 1024))
+        whole = spark.createDataFrame(
+            alerts_table(Active911Reader({"fixture_dir": str(d)}).pull()), SOURCE_SCHEMA
+        )
+        assert whole._jdf.queryExecution().logical().getClass().getSimpleName() == "LogicalRDD"
+        spark.range(1).collect()  # a job to bracket against
+        before = _newest_job(spark)
+        sliced = one_run("sliced")
+        assert _newest_job(spark) == before
+    finally:
+        spark.conf.set(key, prev)
+    assert sliced == base
+    posted = _posted(srv)
+    assert [f["id"] for f in posted] == [f"active911-{i}" for i in range(50)]
+    assert {f["properties"]["callsign"] for f in posted} == {"Structure Fire", "second"}
+    assert next(f for f in posted if f["id"] == "active911-25")["properties"]["callsign"] == "Structure Fire"
