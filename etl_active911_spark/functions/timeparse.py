@@ -269,8 +269,3 @@ def sent_iso_col(name: str = "sent", now_year: int | None = None) -> Column:
         lambda: parse_alert_time_iso(F.col(name), now_year),
     )
 
-
-def tz_case_sql(ts_expr: str) -> str:
-    """DuckDB-side equivalent for oracle SQL: CASE mapping abbr→IANA."""
-    cases = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in TIMEZONE_MAPPINGS.items())
-    return f"CASE {ts_expr} {cases} ELSE NULL END"

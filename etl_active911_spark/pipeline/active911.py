@@ -2,8 +2,8 @@
 
 Pure DataFrame logic: ``alerts_df`` (24 string columns, the reference's
 OutputSchema task.ts:18-43) → ``features_df`` (nested GeoJSON features,
-task.ts:214-231). Everything is built-in Column expressions; the only
-shuffle is the response-dedup aggregation (O-19), keyed by alert id.
+task.ts:214-231). Everything is built-in Column expressions; only the
+explode formulation (``to_features_exploded``) shuffles, for O-19.
 
 At 100 TB the per-alert work (coordinate fallback, regex extraction,
 templating) is a single narrow stage. The links array and the time parse
@@ -218,7 +218,7 @@ def links_array(deduped: DataFrame) -> DataFrame:
     )
 
 
-def links_array_native(time_as_iso: bool = False) -> Column:
+def links_column(time_as_iso: bool = False) -> Column:
     """O-13/O-14/O-19/O-20 in one shuffle-free Column expression
     (SURVEY.md §7 "semantics-preserving shortcut": ``responses`` never
     leaves its alert row, so dedup can stay inside the row).
@@ -333,7 +333,7 @@ def _feature_fields(links: Column, lon: Column, lat: Column) -> list[Column]:
 
 
 def _features() -> tuple[Column, list[Column]]:
-    """``(keep, fields)`` of the array-native ``to_features``, memoized:
+    """``(keep, fields)`` of ``to_features``, memoized:
     the tree is fixed, and building it costs py4j round trips on every
     call (rule 35). The tree is unresolved, so each plan still binds the
     session time zone of the ``start`` parse at its own analysis."""
@@ -341,7 +341,7 @@ def _features() -> tuple[Column, list[Column]]:
 
     def build():
         keep, lon, lat = _coordinates()
-        return keep, _feature_fields(links_array_native(), lon, lat)
+        return keep, _feature_fields(links_column(), lon, lat)
 
     return memo_cols("active911.features", build)
 
@@ -351,21 +351,24 @@ def _named(fields: list[Column]) -> list[Column]:
     return [c.alias(n) for n, c in zip(FEATURE_FIELDS, fields)]
 
 
-def to_features(alerts: DataFrame, array_native: bool = True) -> DataFrame:
+def to_features(alerts: DataFrame) -> DataFrame:
     """Full O-9…O-20 pipeline: alerts (24 string cols) → GeoJSON features
     (task.ts:214-231). Returns one row per feature, nested struct schema
     matching FIXTURES.md §A.4.
 
-    ``array_native=True`` (default) computes links inside each row — the
-    whole pipeline is then one filter and one select over memoized Column
-    trees, one narrow stage with ZERO shuffles. The explode+aggregate
-    formulation (``array_native=False``) produces identical results
-    (asserted in tests) and exists because its exploded intermediates are
-    what the flat oracle queries check.
+    Links are computed inside each row, so the whole pipeline is one
+    filter and one select over memoized Column trees: one narrow stage
+    with ZERO shuffles. ``to_features_exploded`` is the reference it is
+    tested against.
     """
-    if array_native:
-        keep, fields = _features()
-        return alerts.filter(keep).select(*_named(fields))
+    keep, fields = _features()
+    return alerts.filter(keep).select(*_named(fields))
+
+
+def to_features_exploded(alerts: DataFrame) -> DataFrame:
+    """``to_features`` as the explode+aggregate formulation, built from
+    the exploded intermediates the flat oracle queries check; the tests
+    assert it gives identical results."""
     resolved = resolve_coordinates(alerts)
     links = links_array(dedupe_links(extract_responses(alerts)))
     with_links = resolved.join(links, "id", "left").withColumn(

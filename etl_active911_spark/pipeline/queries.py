@@ -206,7 +206,7 @@ def a911_pipeline_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinates, and per-alert link count."""
     alerts = synthetic_alerts(spark, sf_dir)
     resolved = a911.resolve_coordinates(alerts)
-    # links stay inside the row (links_array_native) → the whole pipeline
+    # links stay inside the row (links_column) → the whole pipeline
     # is one narrow stage, zero shuffles (SURVEY.md §7 shortcut).
     return resolved.select(
         F.concat(F.lit("active911-"), F.col("id")).alias("feature_id"),
@@ -215,7 +215,7 @@ def a911_pipeline_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
         a911.alert_remarks().alias("remarks"),
         "lon_d",
         "lat_d",
-        F.size(a911.links_array_native(time_as_iso=True)).cast("bigint").alias("n_links"),
+        F.size(a911.links_column(time_as_iso=True)).cast("bigint").alias("n_links"),
     )
 
 
@@ -271,7 +271,7 @@ def a911_features_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     alerts = synthetic_alerts(spark, sf_dir)
     resolved = a911.resolve_coordinates(alerts)
-    links = a911.links_array_native(time_as_iso=True)
+    links = a911.links_column(time_as_iso=True)
     links_str = F.array_join(
         F.transform(
             links,

@@ -40,92 +40,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # The driver records CORRECTNESS rows for the FIRST 50 entries of
-# ``queries()`` only (observed in rounds 1 and 2: exactly 50 rows, cut at
-# registration index 49 both times). This list curates that scoring window.
-#
-# ROTATION POLICY (since r4, VERDICT r03 item 3): the window = CORE +
-# ROTATION. CORE keeps every SURVEY §2 family and the full reference
-# pipeline surface (O-*/a911) on a hard driver row EVERY round. ROTATION
-# swaps each round to the queries whose last driver row is oldest.
-#
-# r8: CORRECTNESS_r07 came back 50/50 green, so the three held red rows
-# retire and CORE is restored to 30 (the plan recorded in the r7 queue
-# note): the four benched members (x8_stratified_sample,
-# x8_train_holdout_split, x6_ts_dtw, n13_python_udtf) return. ROTATION's
-# 20 slots all go to NEVER-driver-scored queries — the r7 operator
-# additions (CDC chunking, cross-source dup matrix, LSH tuning curve,
-# effective tokens, interval join, length batching, water-filling budget,
-# annealed mixture, release manifest, dataset report, corpus diff,
-# readability, pHash dedup, WAV codec, matrix profile + discord) plus
-# x4_heavy_hitters / x4_pii_redact / x3_scalar_quant / tpch_q9 from the
-# older never-windowed set. ≥20 never-scored ✓ (all 20).
-#
-# r9: CORRECTNESS_r08 came back 50/50 green, so CORE stays at these 30
-# and ROTATION turns over entirely to the 20 oldest-evidence queries
-# (every member last driver-scored in r1/r2 — the queue recorded below
-# in r8). The r10 queue (never-scored remainder) is recorded after
-# ROTATION.
-#
-# r10: CORRECTNESS_r09 came back 50/50 green (no red carry-over); CORE is
-# unchanged and ROTATION executes the r10 queue exactly as pinned in r9
-# (VERDICT r09 item 1). Queries that run iterative jobs sit late in the
-# window so an abort there cannot un-score the rest of the sweep;
-# ``x3_ann_ivf_partitioned`` (writes a parquet index) is pinned dead last.
-#
-# r11 REBALANCE (VERDICT r10 items 1+3, executed jointly): CORRECTNESS_r10
-# came back 50/50 green. The registry is 267 queries against a 50-row
-# window, so CORE's double-covers now cost the r10 wave whole rounds of
-# driver evidence. CORE is trimmed 30 -> 23: one query per §2 family
-# (flagship + the a911 pair kept, per the verdict), dropping the second
-# family rows (x4_lang_id, x5_media_decode_real, x8_train_holdout_split,
-# x6_ts_dtw, n13_python_udtf) and the beyond-survey relational pair
-# (n15_sql_api, n16_recursive_cte) into the long-cycle rotation pool —
-# all seven are driver-green through r10 and stay covered every round by
-# the local 258-oracle replica + hostile-TZ sweep. ROTATION widens to 27:
-# the 20-slot r11 queue EXACTLY as pinned in r9/r10 (VERDICT r10 item 1)
-# plus the first 7 of the recorded r12 queue, so the r10 wave's driver
-# debt clears by r13 (queue math below).
-#
-# r12 (VERDICT r11 item 1): CORRECTNESS_r11 came back 47/47 green on every
-# oracled row (3 rows-only by design). CORE unchanged; ROTATION executes
-# the pinned r12 queue EXACTLY — the remaining 27 named r10-wave queries
-# (re-pinned verbatim in VERDICT r11 item 1). All 27 carry DuckDB
-# oracles, so the r12 window was 50/50 hash-checked — CORRECTNESS_r12
-# confirmed it (first all-hash-checked window, VERDICT r12 preamble).
-#
-# r13 (VERDICT r12 item 1): CORRECTNESS_r12 came back 50/50 green, so no
-# red row carries over and ROTATION executes the pinned r13 queue EXACTLY
-# (the queue recorded in the r12 queue-math note and re-pinned in both
-# VERDICT r12 item 1 and tests/test_registry_order.py:PINNED_R13_QUEUE):
-# the r10-wave tail pair, the 18 r11-round additions, then the 7
-# long-cycle ex-CORE refreshes (each last driver-scored r10 when CORE was
-# trimmed). All 27 carry DuckDB oracles, so the r13 window is again 50/50
-# hash-checked. Iterative/job-running members sit late in the window so
-# an abort there cannot un-score the rest of the sweep.
-#
-# r14 (VERDICT r13 item 1): CORRECTNESS_r13 came back 50/50 green (every
-# row hash-checked), so no red row carries over and ROTATION executes the
-# pinned r14 queue EXACTLY (recorded in the r13 queue-math note and
-# pinned in tests/test_registry_order.py:PINNED_R14_QUEUE): the 19 named
-# carry-overs — mips/frontier/lineage/overmerge, the r11-verdict sketch
-# error-bound companions, the r12-round + late-r12-session wave — then 8
-# fill slots, r13-session newcomers (composed ingest funnel, t-closeness,
-# DoReMi step) first and the oldest never-driver-scored oracled pool
-# after. All 27 carry DuckDB oracles, so the r14 window is again 50/50
-# hash-checked.
-#
-# r15 (VERDICT r14 item 1): CORRECTNESS_r14 came back 50/50 green (every
-# row hash-checked, fourth consecutive all-hash window), so no red row
-# carries over and ROTATION executes the pinned r15 queue EXACTLY
-# (pinned at r14 session close in
-# tests/test_registry_order.py:PINNED_R15_QUEUE): ALL 21 windowable
-# never-driver-scored oracled queries (the 17 pre-r14 pool members + the
-# 4 r14-session additions) plus 6 long-cycle refreshes with the oldest
-# driver evidence (the r3-last streaming/UDF rows + the late-r14
-# n23_skew_profile). Executing this window drives windowable oracled
-# driver debt to ZERO. All 27 carry DuckDB oracles; heavy/iterative
-# members (matryoshka brute-force eval, the two-scan Lloyd consumers)
-# sit in the final slots so an abort cannot un-score the sweep.
+# ``queries()`` only. That window is PRIORITY = CORE + ROTATION, 23 + 27 =
+# 50 names. CORE keeps one query per SURVEY §2 family and the reference
+# pipeline surface (O-*/a911) on a driver row every round. ROTATION holds
+# the oracle-backed queries whose last driver row is oldest, with the
+# iterative and heavy ones last so an abort cannot un-score the rest.
+# LAST is pinned to the very end. tests/test_registry_order.py pins the
+# window, the live rotation queue and the next one; rows-only queries
+# (no oracle) stay out of the window.
 CORE: tuple[str, ...] = (
     "flagship_revenue_by_nation",
     "o2_source_roundtrip",
@@ -152,13 +74,8 @@ CORE: tuple[str, ...] = (
     "x9_curation_pipeline",
 )
 
-#: r15 rotation — the 27-slot queue pinned at r14 session close
-#: (tests/test_registry_order.py:PINNED_R15_QUEUE, VERDICT r14 item 1):
-#: the 21 windowable never-driver-scored oracled queries, then 6
-#: long-cycle refreshes with the oldest driver evidence. Every member
-#: carries a DuckDB oracle, so with the fully-oracled CORE the r15
-#: window is 50/50 hash-checked; executing it drives windowable oracled
-#: driver debt to zero.
+#: The live rotation queue (``PINNED_R15_QUEUE`` in
+#: tests/test_registry_order.py).
 ROTATION: tuple[str, ...] = (
     "x2_cluster_drift",
     "x2_shingle_df_profile",
@@ -190,47 +107,6 @@ ROTATION: tuple[str, ...] = (
 )
 
 PRIORITY: tuple[str, ...] = CORE + ROTATION
-
-#: QUEUE MATH after the r14 rotation (window = 23 CORE + 27 ROTATION):
-#: r14 clears the whole r12-session wave (perceptual trio, governance
-#: set, retention cohorts, error-bound companions) plus the first three
-#: r13-session newcomers, so after r14 executes the never-driver-scored
-#: oracled pool is down to the r15 queue below plus whatever r14's own
-#: session adds.
-#: r15 queue (PINNED at r14 session close in
-#:   tests/test_registry_order.py:PINNED_R15_QUEUE — VERDICT r13 item
-#:   5, exactly-full): ALL 21 windowable never-driver-scored oracled
-#:   queries — the 17 pre-r14 pool members (x2_cluster_drift,
-#:   x2_shingle_df_profile, x6_dominant_period, x6_event_type_markov,
-#:   x6_threshold_runs, x6_weekday_profile, x7_coverage_gap,
-#:   x7_temporal_hotspots, x8_dup_weighted_counts, x8_source_quota_fill,
-#:   x9_gate_ablation, x2_cluster_tail_index, x9_ingest_ablation,
-#:   x9_ingest_routing, x3_matryoshka_recall, x6_ar1_halflife,
-#:   x8_pack_attention_contamination) plus the 4 r14-session additions
-#:   (x9_recursive_ldiversity, x9_dp_budget, x3_ann_ivf_lloyd2,
-#:   x3_ann_ivf_reseed_plan) — and 6 long-cycle refreshes with the
-#:   OLDEST driver evidence (each last scored r3, computed mechanically
-#:   from the CORRECTNESS files: n11_sliding_window, n12_stateful_dedup,
-#:   n13_apply_in_pandas, n13_pandas_grouped_agg, n14_stream_static_join
-#:   — x4_bpe_token_count yielded its sixth refresh slot to the late
-#:   r14-session n23_skew_profile). Executing r15 drives the oracled
-#:   driver debt
-#:   to ZERO (only the rows-only-by-design set and the disk-writing
-#:   LAST set remain outside).
-#: r16 queue (PINNED at r15 session close in
-#:   tests/test_registry_order.py:PINNED_R16_QUEUE, forward pin — the
-#:   live ROTATION stays the r15 queue until the driver scores it):
-#:   the one r15-session windowable addition (x4_langid_risk_coverage)
-#:   + the 26 oldest-evidence refreshes (16 last scored r3 incl. the
-#:   promised x4_bpe_token_count, 10 last scored r4), computed
-#:   mechanically from the CORRECTNESS files with post-r15 evidence
-#:   applied. Swapping ROTATION to it is r16's first commit.
-#: Rows-only by design (never windowable): n4_approx_percentiles,
-#: n5_approx_count_distinct, x3_ann_ivf (raw sketch/ANN values — their
-#: oracled error-bound/seeded companions are windowable instead),
-#: x3_pca_project, x3_ann_pq/brp/ivf_pq/ivf_partitioned,
-#: x4_compression_ratio (oracled companion since r12:
-#: x4_compression_bound), x4_bpe_encode.
 
 #: Disk-writing queries pinned to the very end (rule 16): an abort in a
 #: sandboxed/readonly temp dir cannot un-score the sweep. Their local

@@ -1,15 +1,20 @@
 """Custom Python DataSource for Active911 archived-alert ingestion
 (O-1/O-2/O-3/O-4/O-5/O-6, reference task.ts:98-167,245-279).
 
-Spark 4 Python DataSource API — no JVM code. The reference's shape maps as:
+Spark 4 Python DataSource API — no JVM code. ``format("active911")`` is a
+batch source only: the scheduled lifecycle is the control stream
+(``streaming/jobs.run_control_stream``), which ticks from Spark's JVM rate
+source and pulls on the driver through ``Active911Reader.pull``, never
+through a Python streaming source (CLAUDE.md rule 39). The reference's
+shape maps as:
 
 - login + cookie jar + JWT (task.ts:245-279)  → driver-side ``Transport``
   setup, once per read.
 - per-agency sequential fetch loop (task.ts:124) → one ``InputPartition``
   per agency: Spark parallelizes what the reference serializes. The
-  control stream (streaming/jobs.py) keeps the reference's loop instead:
-  ``Active911Reader.pull`` reads the agencies one after another on the
-  driver, where a small pull costs less than a Python task per agency.
+  control stream keeps the reference's loop instead: ``pull`` reads the
+  agencies one after another on the driver, where a small pull costs
+  less than a Python task per agency.
 - 6-hour time window in the POST body (task.ts:134-135) → ``from_date`` /
   ``to_date`` reader options: the time-range predicate is *pushed into the
   fetch*, never filtered client-side — the source's one genuine
@@ -48,9 +53,6 @@ SOURCE_SCHEMA = StructType(
     [StructField(c, StringType()) for c in ALERT_COLUMNS]
     + [StructField("agency_id", StringType()), StructField("_error", StringType())]
 )
-
-#: Pulls a stream makes when the ``max_pulls`` option is absent.
-MAX_PULLS = 2
 
 _JSONP_RE = re.compile(r"^.*?\(")  # task.ts:158 — strip 'callback(' prefix
 
@@ -205,43 +207,6 @@ def alerts_table(rows: list[tuple]):
     return pa.table([pa.array(c, pa.string()) for c in cols], names=SOURCE_SCHEMA.names)
 
 
-class Active911StreamReader:
-    """Streaming variant (SimpleDataSourceStreamReader) for
-    ``spark.readStream.format("active911")``: each micro-batch is one
-    scheduled pull of the archived-alerts window, the reference's
-    invocation model (task.ts:81 Schedule + the overlapping 6-hour window,
-    task.ts:134-135). Because windows overlap, consecutive batches
-    re-emit alerts; the consumer dedups them by id (the control stream
-    keeps the first occurrence of each feature id in every pull).
-
-    The offset is the pull counter; ``max_pulls`` bounds the fixture
-    stream so AvailableNow terminates. Spark starts a fresh Python process
-    to host this reader on every query start, so ``run_control_stream``
-    does not use it (streaming/jobs.py).
-    """
-
-    def __init__(self, options: dict):
-        self.batch = Active911Reader(options)
-        self.max_pulls = int(options.get("max_pulls", MAX_PULLS))
-
-    def initialOffset(self) -> dict:
-        return {"pull": 0}
-
-    def read(self, start: dict):
-        pull = start["pull"]
-        if pull >= self.max_pulls:
-            return iter([]), {"pull": pull}
-        return iter(self.batch.pull()), {"pull": pull + 1}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        if end["pull"] > start["pull"]:
-            return iter(self.batch.pull())
-        return iter([])
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class Active911DataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -252,9 +217,6 @@ class Active911DataSource(DataSource):
 
     def reader(self, schema: StructType) -> Active911Reader:
         return Active911Reader(dict(self.options))
-
-    def simpleStreamReader(self, schema: StructType) -> Active911StreamReader:
-        return Active911StreamReader(dict(self.options))
 
 
 def register(spark) -> None:

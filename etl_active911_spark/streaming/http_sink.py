@@ -7,11 +7,12 @@ One serializer: every feature is written to JSON in the JVM
 reference's UTC ISO strings), and ``post_feature_collection`` joins the
 pre-serialized strings into one body. Two callers:
 
-- ``http_sink_foreach_batch`` (``submit_features``, ``run_to_http``):
-  batches that live on the executors POST per-PARTITION chunks from there
-  (``foreachPartition``), never collected to the driver;
-- the control stream (``streaming/jobs.run_control_stream``): a pull is
-  already on the driver, so it collects the strings and POSTs from there.
+- ``submit_features``: a DataFrame that lives on the executors POSTs
+  per-PARTITION chunks from there (``foreachPartition``), never collected
+  to the driver;
+- the control stream (``streaming/jobs.run_control_stream``), the
+  scheduled lifecycle: a pull is already on the driver, so it collects
+  the strings and POSTs from there.
 
 Each POST carries at most ``max_features_per_post`` features. The
 reference submits one FeatureCollection per scheduled run; at scale that
@@ -25,7 +26,7 @@ from __future__ import annotations
 
 import itertools
 import urllib.request
-from typing import Callable, Iterable
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -71,49 +72,16 @@ def post_in_chunks(
         post_feature_collection(url, part, timeout)
 
 
-def http_sink_foreach_batch(
-    url: str, max_features_per_post: int = 1000, timeout: float = 30.0
-) -> Callable[[DataFrame, int], None]:
-    """Build the ``foreachBatch`` function: executors post their partitions
-    in bounded chunks. Usable directly on a batch DataFrame too
-    (``fn(df, 0)``) — same duality as the windowing transforms."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(json_column()).foreachPartition(
-            lambda rows: post_in_chunks(
-                url, (r[0] for r in rows), max_features_per_post, timeout
-            )
-        )
-
-    return sink
-
-
 def submit_features(
     features_df: DataFrame,
     url: str,
     max_features_per_post: int = 1000,
     timeout: float = 30.0,
 ) -> None:
-    """Batch entry point — the literal ``submit(fc)`` analogue: POST every
-    feature of a (batch) features DataFrame."""
-    http_sink_foreach_batch(url, max_features_per_post, timeout)(features_df, 0)
-
-
-def run_to_http(
-    stream_df: DataFrame,
-    url: str,
-    checkpoint_dir: str,
-    max_features_per_post: int = 1000,
-) -> None:
-    """Streaming entry point: AvailableNow micro-batches → HTTP posts,
-    batch-atomic via foreachBatch (one logical submit per micro-batch,
-    mirroring the reference's one submit per scheduled run)."""
-    (
-        stream_df.writeStream.foreachBatch(
-            http_sink_foreach_batch(url, max_features_per_post)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    """The literal ``submit(fc)`` analogue for a DataFrame that lives on
+    the executors: each partition POSTs its features in chunks of at most
+    ``max_features_per_post`` from where it runs, never collected to the
+    driver."""
+    features_df.select(json_column()).foreachPartition(
+        lambda rows: post_in_chunks(url, (r[0] for r in rows), max_features_per_post, timeout)
     )

@@ -17,6 +17,7 @@ from etl_active911_spark.pipeline.active911 import (
     ALERT_COLUMNS,
     ALERTS_SCHEMA,
     to_features,
+    to_features_exploded,
 )
 
 
@@ -290,14 +291,14 @@ def test_empty_responses_empty_links(spark):
 # --- O-12/O-16 feature construction (task.ts:214-231) ---------------------
 
 
-def test_array_native_equals_explode_formulation(spark):
-    """The shuffle-free array-native links path must produce exactly the
-    nested output of the explode+aggregate path (same fixture corpus)."""
+def test_to_features_equals_explode_formulation(spark):
+    """The shuffle-free in-row links of ``to_features`` must equal the
+    explode+aggregate formulation's nested output (same fixture corpus)."""
     from etl_active911_spark.pipeline.fixtures import synthetic_alerts
 
     alerts = synthetic_alerts(spark, "/root/testdata/sf0.001").limit(300)
-    a = to_features(alerts, array_native=True).collect()
-    b = to_features(alerts, array_native=False).collect()
+    a = to_features(alerts).collect()
+    b = to_features_exploded(alerts).collect()
     canon = lambda rows: sorted((r["id"], repr(r["properties"]), repr(r["geometry"])) for r in rows)  # noqa: E731
     assert canon(a) == canon(b)
 
@@ -355,7 +356,7 @@ def test_feature_shape_and_remarks_whitespace(spark):
     assert f["geometry"]["type"] == "Point"
 
 
-# --- hostile response logs: array-native == explode == goldens ------------
+# --- hostile response logs: in-row links == explode == goldens -----------
 
 # (responses, expected links as (callsign, remarks, ISO production_time))
 HOSTILE_LOGS = [
@@ -413,22 +414,22 @@ def _hostile_alerts(spark):
 
 
 def test_hostile_logs_links_golden(spark):
-    from etl_active911_spark.pipeline.active911 import links_array_native
+    from etl_active911_spark.pipeline.active911 import links_column
 
     got = {
         r["id"]: [(l["callsign"], l["remarks"], l["production_time"]) for l in r["links"]]
         for r in _hostile_alerts(spark)
-        .select("id", links_array_native(time_as_iso=True).alias("links"))
+        .select("id", links_column(time_as_iso=True).alias("links"))
         .collect()
     }
     for i, (log, want) in enumerate(HOSTILE_LOGS):
         assert got[str(i)] == want, f"{log!r}: got {got[str(i)]!r}, want {want!r}"
 
 
-def test_hostile_logs_array_native_equals_explode(spark):
+def test_hostile_logs_to_features_equals_explode(spark):
     alerts = _hostile_alerts(spark)
-    a = to_features(alerts, array_native=True).collect()
-    b = to_features(alerts, array_native=False).collect()
+    a = to_features(alerts).collect()
+    b = to_features_exploded(alerts).collect()
     canon = lambda rows: sorted((r["id"], repr(r["properties"])) for r in rows)  # noqa: E731
     assert len(a) == len(HOSTILE_LOGS)
     assert canon(a) == canon(b)

@@ -98,33 +98,6 @@ def test_driver_pull_matches_partitioned_read(spark, fixture_dir):
     assert empty.schema == SOURCE_SCHEMA and empty.count() == 0
 
 
-def test_streaming_overlapping_pulls_dedup(spark, fixture_dir):
-    """O-2 streaming shape: two scheduled pulls of the same (overlapping)
-    window re-emit every alert; dropDuplicatesWithinWatermark by id
-    collapses them — the reference's stable-feature-id dedup semantics."""
-    stream = (
-        spark.readStream.format("active911")
-        .option("fixture_dir", fixture_dir)
-        .option("max_pulls", "2")
-        .load()
-        .filter("_error IS NULL")
-        .withColumn("ingest_ts", __import__("pyspark").sql.functions.current_timestamp())
-        .withWatermark("ingest_ts", "10 seconds")
-        .dropDuplicatesWithinWatermark(["id"])
-    )
-    (
-        stream.writeStream.format("memory")
-        .queryName("a911_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = spark.table("a911_stream")
-    assert {r["id"] for r in got.collect()} == {"42", "43", "44"}
-    assert got.count() == 3  # duplicates from the second pull dropped
-
-
 def test_source_to_features_end_to_end(spark, fixture_dir):
     """Full reference lifecycle offline: wire payload → source → transform
     → GeoJSON features (the control() pipeline, task.ts:98-243)."""

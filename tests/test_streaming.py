@@ -78,14 +78,21 @@ def test_stateful_running_stats(spark, events_dir):
 
 
 def test_dedup_stream_drops_resubmitted_ids(spark, events_dir):
+    import time as _time
+
     events = spark.read.parquet(events_dir)
-    # simulate the reference's overlapping re-pull: the same events arrive twice
+    # simulate the reference's overlapping re-pull: the same events arrive
+    # twice in one pull (8 files, the first micro-batch), then once more in
+    # the next one (its last hour, 14 events, is left to the dedup state)
     doubled_dir = events_dir + "_doubled"
-    events.union(events).repartition(4).write.mode("overwrite").parquet(doubled_dir)
+    events.union(events).repartition(8).write.mode("overwrite").parquet(doubled_dir)
+    _time.sleep(1.1)  # file-stream orders by modification time
+    events.repartition(2).write.mode("append").parquet(doubled_dir)
     stream = jobs.dedup_stream(jobs.read_events_stream(spark, doubled_dir))
     out_dir = tempfile.mkdtemp(prefix="dedup_out_")
     ckpt = tempfile.mkdtemp(prefix="dedup_ckpt_")
     jobs.run_to_parquet(stream, out_dir, ckpt)
+    assert sorted(os.listdir(out_dir)) == ["batch=0", "batch=1"]
     got = spark.read.parquet(os.path.join(out_dir, "*"))
     assert got.count() == events.count()
     assert got.select("event_id").distinct().count() == events.count()
