@@ -130,21 +130,13 @@ def o22_error_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     alerts = synthetic_alerts(spark, sf_dir)
     obs = Observation("a911_errors")
-    lon0 = a911.js_number(F.col("lon"))
-    lat0 = a911.js_number(F.col("lat"))
-    # coalesce: NULL (JS NaN) is not === 0 → no fallback (task.ts:172)
-    needs_fb = F.coalesce((lon0 == 0) | (lat0 == 0), F.lit(False))
-    coords = F.slice(F.split(F.trim(F.col("place")), ","), 1, 2)
-    fb_ok = (
-        (F.size(coords) == 2)
-        & a911.js_number(F.element_at(coords, 1)).isNotNull()
-        & a911.js_number(F.try_element_at(coords, F.lit(2))).isNotNull()
-    )
+    # the O-10 row condition resolve_coordinates filters on (task.ts:172-185)
+    keep = a911._coordinates()[0]
     observed = alerts.observe(
         obs,
         F.count(F.lit(1)).alias("n_input"),
-        F.sum(F.when(needs_fb & ~fb_ok, 1).otherwise(0)).cast("bigint").alias("n_dropped"),
-        F.sum(F.when(~needs_fb | fb_ok, 1).otherwise(0)).cast("bigint").alias("n_features"),
+        F.sum(F.when(~keep, 1).otherwise(0)).cast("bigint").alias("n_dropped"),
+        F.sum(F.when(keep, 1).otherwise(0)).cast("bigint").alias("n_features"),
     )
     # run the real pipeline over the observed scan (metrics piggyback on it)
     a911.resolve_coordinates(observed).count()

@@ -9,7 +9,7 @@ through a Python streaming source (CLAUDE.md rule 39). The reference's
 shape maps as:
 
 - login + cookie jar + JWT (task.ts:245-279)  → driver-side ``Transport``
-  setup, once per read.
+  setup, once per read (``pull``: one login for the whole pull).
 - per-agency sequential fetch loop (task.ts:124) → one ``InputPartition``
   per agency: Spark parallelizes what the reference serializes. The
   control stream keeps the reference's loop instead: ``pull`` reads the
@@ -161,28 +161,30 @@ class Active911Reader(DataSourceReader):
             )
         return FixtureTransport(self.fixture_dir)
 
-    def partitions(self) -> list[AgencyPartition]:
-        transport = self._transport()
+    def _agencies(self, transport) -> list[int]:
         _token, entitled = transport.login()
         # O-11 allow-list validation (task.ts:105-114): requested ⊆ entitled
-        if self.requested:
-            for a in self.requested:
-                if a not in entitled:
-                    raise ValueError(
-                        f"Current user account does not provide access to agency: {a}"
-                    )
-            agencies = self.requested
-        else:
-            agencies = entitled
-        return [AgencyPartition(a) for a in agencies]
+        if not self.requested:
+            return entitled
+        for a in self.requested:
+            if a not in entitled:
+                raise ValueError(
+                    f"Current user account does not provide access to agency: {a}"
+                )
+        return self.requested
+
+    def partitions(self) -> list[AgencyPartition]:
+        return [AgencyPartition(a) for a in self._agencies(self._transport())]
 
     def read(self, partition: AgencyPartition) -> Iterator[tuple]:
         # one transport per partition: HTTP logs in lazily per executor
         # (cookies never serialize through the plan)
-        transport = self._transport()
-        agency = str(partition.agency_id)
+        return self._rows(self._transport(), partition.agency_id)
+
+    def _rows(self, transport, agency_id: int) -> Iterator[tuple]:
+        agency = str(agency_id)
         try:
-            payload = transport.fetch(partition.agency_id, self.from_ms, self.to_ms)
+            payload = transport.fetch(agency_id, self.from_ms, self.to_ms)
             alerts = unwrap_jsonp(payload)
             if alerts.get("result") == "error":  # O-4 (task.ts:162-165)
                 yield tuple([None] * len(ALERT_COLUMNS)) + (agency, str(alerts.get("message")))
@@ -193,9 +195,11 @@ class Active911Reader(DataSourceReader):
             yield tuple([None] * len(ALERT_COLUMNS)) + (agency, f"{type(err).__name__}: {err}")
 
     def pull(self) -> list[tuple]:
-        """One scheduled pull: every agency's rows, read one agency after
-        another in this process (task.ts:124)."""
-        return [row for part in self.partitions() for row in self.read(part)]
+        """One scheduled pull: log in once, then read every agency's rows
+        one after another in this process through the same transport
+        (task.ts:124, task.ts:245-279)."""
+        transport = self._transport()
+        return [row for a in self._agencies(transport) for row in self._rows(transport, a)]
 
 
 def alerts_table(rows: list[tuple]):

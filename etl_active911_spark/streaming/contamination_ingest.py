@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from etl_active911_spark.operators.similarity import train_contamination_rows
-from etl_active911_spark.streaming.neardup_ingest import _read_or_none
+from etl_active911_spark.streaming.jobs import _read_or_none
 
 
 def run_contamination_stream(

@@ -5,11 +5,12 @@ quality gate (raw text) → contamination gate (embeddings), in the
 ``operators/ingest_funnel.py`` order, emitting one per-doc funnel verdict
 row per arrival.
 
-Composition reuses each gate's shared helper VERBATIM (signature/band
-machinery from the near-dup gate, ``scrub_segment_rows`` +
-``scrub_pii_rollup``, ``gopher_stats``, ``train_contamination_rows``)
+Composition runs each gate's own code: the near-dup stage
+(``neardup_ingest.neardup_stage``), the segment-ownership stage
+(``scrub_ingest.segment_ownership``), ``scrub_segment_rows`` +
+``scrub_pii_rollup``, ``gopher_stats``, ``train_contamination_rows``,
 and the shared flag construction ``funnel_flag_rows`` — so no verdict
-can drift from the batch fold.
+can drift from the batch fold or from the standalone gates.
 
 State = exactly the union of the member gates' state: the signature +
 band index (near-dup), the segment ledger (scrub), and the emitted
@@ -25,19 +26,14 @@ Out-of-order arrivals diverge one-sidedly at the near-dup and scrub
 stages exactly as documented in their standalone modules. Pinned in
 tests/test_full_ingest.py (one-batch and 3-way ordered splits).
 
-Exactly-once caveat: plain parquet appends with the anti-join
-re-delivery guard, same note as every sibling gate — production routes
-the verdict rows through the keyed upsert sink (streaming/jobs.py,
-key doc_id). Crash-window ordering (ADVICE r13 item 1): state dirs
-(signatures, bands, segment claims) are written BEFORE the verdict
-rows, and every state append anti-joins what is already on disk — so a
-crash anywhere between the four writes replays to the same verdicts
-with no duplicate state (pinned in tests/test_full_ingest.py).
-Replayed SELF-state is additionally made invisible to the compute
-(ADVICE r14 item 1): sigs_old/bands_old anti-join the batch's doc_ids,
-so a replayed batch cannot inflate the bucket-cap n_old with its own
-pre-crash bands (which would exclude buckets that were under the cap
-originally and change the survivor set); the cap boundary is pinned in
+Exactly-once: plain parquet appends with the anti-join re-delivery
+guard (``out_dir``), written LAST (ADVICE r13 item 1): the state dirs
+(signatures, bands, segment claims) come first, and each state append
+anti-joins what is already on disk — so a crash anywhere between the
+four writes replays to the same verdicts with no duplicate state. The
+two shared stages also hide the batch's own pre-crash state from the
+compute (ADVICE r14 item 1), so a replay cannot inflate the bucket-cap
+count with its own bands; the cap boundary is pinned in
 tests/test_full_ingest.py (bucket at exactly max_bucket).
 """
 
@@ -46,13 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_active911_spark.operators.dedup import (
-    LSH_MAX_BUCKET,
-    lsh_band_rows,
-    minhash_signatures,
-    scrub_segment_rows,
-    signature_agreement_pairs,
-)
+from etl_active911_spark.operators.dedup import LSH_MAX_BUCKET, scrub_segment_rows
 from etl_active911_spark.operators.ingest_funnel import (
     funnel_flag_rows,
     ingest_arrival_text,
@@ -65,11 +55,12 @@ from etl_active911_spark.operators.similarity import (
     train_contamination_rows,
 )
 from etl_active911_spark.operators.textual import gopher_stats
-from etl_active911_spark.streaming.neardup_ingest import _read_or_none
+from etl_active911_spark.streaming.jobs import _read_or_none
+from etl_active911_spark.streaming.neardup_ingest import neardup_stage
+from etl_active911_spark.streaming.scrub_ingest import segment_ownership
 
 
 def _stages_2_to_5(
-    spark,
     batch: DataFrame,
     surv: DataFrame,
     tr_all: DataFrame,
@@ -78,29 +69,19 @@ def _stages_2_to_5(
 ) -> tuple[DataFrame, DataFrame]:
     """Stages 2-5 of the composed funnel over ONE micro-batch — scrub
     (first-writer segment ledger) → PII on kept segments → quality →
-    contamination — shared VERBATIM by the dir-state fold below and the
+    contamination — shared by the dir-state fold below and the
     state-store twin (streaming/state_ingest.py), so the two paths
     cannot drift anywhere downstream of the near-dup verdict. ``batch``
     = every arrival (doc_id, source, text); ``surv`` = stage-1
     survivors (doc_id, text). Returns (verdict rows, this batch's new
-    ledger claims — already localCheckpoint'd and anti-joined against
-    the on-disk ledger, ready for the idempotent append)."""
+    (seg_md5, owner_doc) ledger claims, ready for the idempotent
+    append — see ``segment_ownership``)."""
     arrv = surv.select("doc_id", ingest_arrival_text().alias("text"))
     c = scrub_segment_rows(arrv, with_text=True).localCheckpoint(eager=True)
-    led_old = _read_or_none(spark, ledger_dir)
-    claims = c.groupBy("seg_md5").agg(F.min("doc_id").alias("batch_owner"))
-    if led_old is not None:
-        claims = claims.join(led_old.select("seg_md5"), "seg_md5", "left_anti")
-        owned = led_old.select("seg_md5", F.col("owner_doc").alias("owner"))
-    else:
-        owned = None
-    claims = claims.localCheckpoint(eager=True)  # verdict + append
-    ownership = claims.select("seg_md5", F.col("batch_owner").alias("owner"))
-    if owned is not None:
-        ownership = ownership.unionByName(owned)
-    flagged = c.join(ownership, "seg_md5").select(
+    owned, claims = segment_ownership(c, ledger_dir)
+    flagged = owned.select(
         "doc_id", "n", "n_tok", "seg_txt",
-        (F.col("owner") != F.col("doc_id")).alias("removed"),
+        (F.col("owner_doc") != F.col("doc_id")).alias("removed"),
     )
     ledger = scrub_pii_rollup(flagged)
 
@@ -157,66 +138,10 @@ def run_full_ingest_stream(
             return
         batch = batch.localCheckpoint(eager=True)  # feeds all five stages
 
-        # --- stage 1: near-dup (the neardup_ingest machinery verbatim) ---
-        # ADVICE r14 item 1: a crash between the state writes and the
-        # verdict write leaves THIS batch's signatures/bands on disk; the
-        # replay must not see its own pre-crash state (it would inflate
-        # n_old in the bucket-cap filter — excluding buckets that were
-        # under the cap originally and changing the survivor set — and
-        # duplicate batch rows into cross/all_sigs). Keep the raw disk
-        # reads for the append-dedup guards below; anti-join the batch's
-        # doc_ids out of the COMPUTE views.
-        sigs_disk = _read_or_none(spark, sig_dir)
-        bands_disk = _read_or_none(spark, bands_dir)
-        batch_ids = batch.select("doc_id")
-        sigs_old = (
-            None if sigs_disk is None
-            else sigs_disk.join(batch_ids, "doc_id", "left_anti")
+        # --- stage 1: near-dup (neardup_ingest.neardup_stage) ---
+        pairs, sigs_out, bands_out = neardup_stage(
+            batch, sig_dir, bands_dir, max_bucket
         )
-        bands_old = (
-            None if bands_disk is None
-            else bands_disk.join(batch_ids, "doc_id", "left_anti")
-        )
-        sigs_new = minhash_signatures(batch).localCheckpoint(eager=True)
-        bands_new = lsh_band_rows(sigs_new).localCheckpoint(eager=True)
-        new_buckets = bands_new.groupBy("band_key").agg(
-            F.collect_list("doc_id").alias("ids"),
-            F.count(F.lit(1)).alias("n_new"),
-        )
-        if bands_old is not None:
-            old_sizes = bands_old.groupBy("band_key").agg(
-                F.count(F.lit(1)).alias("n_old")
-            )
-            new_buckets = new_buckets.join(old_sizes, "band_key", "left").select(
-                "band_key", "ids", "n_new",
-                F.coalesce("n_old", F.lit(0)).alias("n_old"),
-            )
-        else:
-            new_buckets = new_buckets.withColumn("n_old", F.lit(0))
-        ok = new_buckets.filter(F.col("n_new") + F.col("n_old") <= max_bucket)
-        within = (
-            ok.filter(F.size("ids") >= 2)
-            .select(F.explode("ids").alias("doc_a"), "ids")
-            .select("doc_a", F.explode("ids").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-        )
-        if bands_old is None:
-            cands = within.distinct()
-            all_sigs = sigs_new
-        else:
-            cross = (
-                bands_new.withColumnRenamed("doc_id", "doc_n")
-                .join(ok.select("band_key"), "band_key")
-                .join(bands_old.withColumnRenamed("doc_id", "doc_o"), "band_key")
-                .filter(F.col("doc_o") != F.col("doc_n"))
-                .select(
-                    F.least("doc_o", "doc_n").alias("doc_a"),
-                    F.greatest("doc_o", "doc_n").alias("doc_b"),
-                )
-            )
-            cands = within.unionByName(cross).distinct()
-            all_sigs = sigs_old.unionByName(sigs_new)
-        pairs = signature_agreement_pairs(cands, all_sigs)
         # the LATER member (larger id ⇒ later arrival under ordered
         # splits) is dropped; historical docs are never retro-dropped
         dropped = (
@@ -228,33 +153,18 @@ def run_full_ingest_stream(
 
         # --- stages 2-5: shared with the state-store twin ---
         rows, claims = _stages_2_to_5(
-            spark, batch, surv.select("doc_id", "text"), tr_all, ev, ledger_dir
+            batch, surv.select("doc_id", "text"), tr_all, ev, ledger_dir
         )
         # State BEFORE verdict rows, each append idempotent (ADVICE r13
         # item 1): the out_dir re-delivery guard suppresses replay once
         # verdict rows exist, so a crash after writing rows but before
         # state would lose the batch's signatures/bands/claims FOREVER.
-        # Writing state first makes the crash window replayable — the
-        # re-run recomputes the batch (rows still absent), and the
-        # anti-joins below discard the state it already wrote, so the
-        # near-dup/scrub folds converge to the same verdicts. claims is
-        # already anti-joined on led_old above.
-        # append guards use the RAW disk state (not the batch-filtered
-        # compute views): replayed self-state must still suppress its own
-        # re-append or the replay would duplicate signature/band rows.
-        sigs_out = sigs_new
-        if sigs_disk is not None:
-            sigs_out = sigs_new.join(sigs_disk.select("doc_id"), "doc_id", "left_anti")
+        # Written first, the state makes the crash window replayable: the
+        # re-run recomputes the batch (rows still absent), and the shared
+        # stages' anti-joins discard the state it already wrote.
         sigs_out.write.mode("append").parquet(sig_dir)
-        bands_out = bands_new
-        if bands_disk is not None:
-            bands_out = bands_new.join(
-                bands_disk.select("doc_id").distinct(), "doc_id", "left_anti"
-            )
         bands_out.write.mode("append").parquet(bands_dir)
-        claims.select(
-            "seg_md5", F.col("batch_owner").alias("owner_doc")
-        ).write.mode("append").parquet(ledger_dir)
+        claims.write.mode("append").parquet(ledger_dir)
         rows.write.mode("append").parquet(out_dir)
 
     writer = src.writeStream.foreachBatch(process).option(

@@ -216,6 +216,24 @@ def _local_slices(spark: SparkSession, table):
     return cut(table)
 
 
+def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """Parquet read that treats ONLY path-not-found as "first batch: nothing
+    materialized yet". Any other failure (transient FS error, corrupt
+    footer, permissions) must abort the batch: read as a first batch, it
+    would make a sink overwrite stored rows or a gate lose every pair with
+    its history (ADVICE r02)."""
+    try:
+        df = spark.read.parquet(path)
+        df.schema  # force analysis so PATH_NOT_FOUND surfaces here
+        return df
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e.getCondition() or "") and not isinstance(
+            getattr(e, "cause", None), FileNotFoundError
+        ):
+            raise
+        return None
+
+
 def run_upsert_to_parquet(
     stream_df: DataFrame,
     out_dir: str,
@@ -250,8 +268,6 @@ def upsert_sink(out_dir: str, key_col: str, n_buckets: int = 8):
     can wrap it (e.g. crash injection between batches)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
         batch = batch_df.withColumn(
             "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
@@ -259,26 +275,15 @@ def upsert_sink(out_dir: str, key_col: str, n_buckets: int = 8):
         touched = [r["__bucket"] for r in batch.select("__bucket").distinct().collect()]
         if not touched:
             return
-        try:
-            existing = spark.read.parquet(out_dir).filter(
-                F.col("__bucket").isin(touched)
-            )
+        existing = _read_or_none(spark, out_dir)
+        if existing is None:
+            merged = batch
+        else:
             # last-write-wins: keys present in this batch replace old rows
-            keep = existing.join(
+            keep = existing.filter(F.col("__bucket").isin(touched)).join(
                 batch.select(F.col(key_col)).distinct(), key_col, "left_anti"
             )
             merged = keep.unionByName(batch)
-        except AnalysisException as e:
-            # ONLY path-not-found means "first batch: nothing materialized
-            # yet". Any other read failure (transient FS error, corrupt
-            # footer, permissions) must abort the batch — treating it as
-            # first-batch would dynamic-overwrite the touched buckets with
-            # batch-only rows and silently drop stored keys (ADVICE r02).
-            if "PATH_NOT_FOUND" not in str(e.getErrorClass() or "") and not isinstance(
-                getattr(e, "cause", None), FileNotFoundError
-            ):
-                raise
-            merged = batch
         merged = merged.localCheckpoint(eager=True)  # cut self-referencing lineage
         (
             merged.write.mode("overwrite")

@@ -16,19 +16,20 @@ Each micro-batch:
    the store is first-writer-wins, which also makes a replayed batch
    emit no self-pairs; re-ingest-as-update would route through the keyed
    upsert sink instead);
-2. signatures + band rows for the arriving docs (the batch operators,
-   unchanged);
-3. the hot-bucket guard on the TOTAL bucket size (historical + arriving
-   members per band key) — the same ``LSH_MAX_BUCKET`` accounting the
-   batch fold applies, so the cap cannot be defeated by feeding a flood
-   one batch at a time;
-4. candidates = within-batch bucket pairs (join-free bucket-and-explode,
+2. ``neardup_stage``, the one near-dup stage the composed funnel
+   (streaming/full_ingest.py) runs too: signatures + band rows for the
+   arriving docs (the batch operators, unchanged); the hot-bucket guard
+   on the TOTAL bucket size (historical + arriving members per band key)
+   — the same ``LSH_MAX_BUCKET`` accounting the batch fold applies, so
+   the cap cannot be defeated by feeding a flood one batch at a time;
+   candidates = within-batch bucket pairs (join-free bucket-and-explode,
    CLAUDE.md rule 18) ∪ arriving-band × historical-band equi-join, both
-   restricted to under-cap buckets;
-5. the dedup verdict from ``signature_agreement_pairs`` — the SAME
-   helper the batch equivalent uses (est. Jaccard ≥ 0.5; no raw text is
-   ever read back, so state never grows beyond sketches);
-6. append verdict pairs, new signatures, and new band rows.
+   restricted to under-cap buckets; the dedup verdict from
+   ``signature_agreement_pairs`` — the SAME helper the batch equivalent
+   uses (est. Jaccard ≥ 0.5; no raw text is ever read back, so state
+   never grows beyond sketches);
+3. append the new band rows, the new verdict pairs, then the new
+   signatures.
 
 Stream ≡ batch: band membership is append-only, so each pair is
 discovered exactly once — when its later member arrives — and the union
@@ -39,19 +40,19 @@ emitted the pairs it discovered while the bucket was small and cannot
 retract them, while the batch fold drops the whole bucket. Both regimes
 are pinned in tests/test_streaming.py.
 
-Exactly-once caveat: plain parquet appends; a crash between the pairs
-append and the sig/band appends can replay a batch. The re-delivery
-anti-join makes the STATE appends idempotent; replayed PAIR rows would
-duplicate, which production routes through the keyed upsert sink
-(streaming/jobs.py, keys (doc_a, doc_b)) — the append path keeps this
-module readable.
+Exactly-once: plain parquet appends over a replayable source. The
+signature store is the re-delivery guard, so it is written LAST; the
+bands and pairs before it are each anti-joined against what is already
+on disk (pairs on ``(doc_a, doc_b)``), and the stage hides the batch's
+own pre-crash rows from the bucket cap and the candidate join. A crash
+between any two appends therefore replays to the batch fold's pairs with
+no duplicate row in any directory (pinned in tests/test_full_ingest.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from etl_active911_spark.operators.dedup import (
     LSH_MAX_BUCKET,
@@ -59,24 +60,73 @@ from etl_active911_spark.operators.dedup import (
     minhash_signatures,
     signature_agreement_pairs,
 )
+from etl_active911_spark.streaming.jobs import _read_or_none
 
 
-def _read_or_none(spark, path: str) -> DataFrame | None:
-    """Parquet read that treats ONLY path-not-found as "first batch".
-    Any other failure (transient FS error, corrupt footer, permissions)
-    must abort the batch — treating it as first-batch would silently
-    lose every cross-arrival pair involving this batch forever (the
-    jobs.py upsert-sink idiom, ADVICE r02)."""
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis so PATH_NOT_FOUND surfaces here
-        return df
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e.getErrorClass() or "") and not isinstance(
-            getattr(e, "cause", None), FileNotFoundError
-        ):
-            raise
-        return None
+def neardup_stage(
+    batch: DataFrame, sig_dir: str, bands_dir: str, max_bucket: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The near-dup stage over one micro-batch of (doc_id, text) arrivals
+    against the signature + band index on disk. Returns ``(pairs,
+    sigs_out, bands_out)``: the agreement pairs (within the batch and
+    against history), and the batch's signature and band rows minus any
+    already on disk, ready for an idempotent append.
+
+    The candidate and agreement steps read the disk state with the
+    batch's own doc_ids removed: after a crash between appends, a
+    replayed batch must not see its pre-crash rows, which would inflate
+    the bucket cap's historical count (dropping buckets that were under
+    the cap the first time) and pair the batch with itself."""
+    spark = batch.sparkSession
+    batch_ids = batch.select("doc_id")
+    sigs_disk = _read_or_none(spark, sig_dir)
+    bands_disk = _read_or_none(spark, bands_dir)
+    # shared by band rows, the agreement join and the append: eager
+    # localCheckpoint (rule 17 — inside foreachBatch each batch is its
+    # own scope)
+    sigs_new = minhash_signatures(batch).localCheckpoint(eager=True)
+    bands_new = lsh_band_rows(sigs_new).localCheckpoint(eager=True)
+    buckets = bands_new.groupBy("band_key").agg(
+        F.collect_list("doc_id").alias("ids"),
+        F.count(F.lit(1)).alias("n_new"),
+    )
+    n_total = F.col("n_new")
+    if bands_disk is not None:
+        bands_old = bands_disk.join(batch_ids, "doc_id", "left_anti")
+        old_sizes = bands_old.groupBy("band_key").agg(F.count(F.lit(1)).alias("n_old"))
+        buckets = buckets.join(old_sizes, "band_key", "left")
+        n_total = n_total + F.coalesce("n_old", F.lit(0))
+    # TOTAL bucket size — historical + arriving — mirrors the batch
+    # fold's LSH_MAX_BUCKET accounting (a flood fed one batch at a
+    # time stops producing pairs the moment the bucket crosses the cap)
+    ok = buckets.filter(n_total <= max_bucket)
+    cands = (
+        ok.filter(F.size("ids") >= 2)
+        .select(F.explode("ids").alias("doc_a"), "ids")
+        .select("doc_a", F.explode("ids").alias("doc_b"))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+    )
+    bands_out = bands_new
+    if bands_disk is not None:
+        cross = (
+            bands_new.withColumnRenamed("doc_id", "doc_n")
+            .join(ok.select("band_key"), "band_key")
+            .join(bands_old.withColumnRenamed("doc_id", "doc_o"), "band_key")
+            .select(
+                F.least("doc_o", "doc_n").alias("doc_a"),
+                F.greatest("doc_o", "doc_n").alias("doc_b"),
+            )
+        )
+        cands = cands.unionByName(cross)
+        bands_out = bands_new.join(
+            bands_disk.select("doc_id").distinct(), "doc_id", "left_anti"
+        )
+    all_sigs = sigs_out = sigs_new
+    if sigs_disk is not None:
+        all_sigs = sigs_disk.join(batch_ids, "doc_id", "left_anti").unionByName(sigs_new)
+        sigs_out = sigs_new.join(sigs_disk.select("doc_id"), "doc_id", "left_anti")
+    pairs = signature_agreement_pairs(cands.distinct(), all_sigs)
+    return pairs, sigs_out, bands_out
 
 
 def run_neardup_stream(
@@ -96,61 +146,24 @@ def run_neardup_stream(
         spark = batch.sparkSession
         batch = batch.dropDuplicates(["doc_id"])
         sigs_old = _read_or_none(spark, sig_dir)
-        bands_old = _read_or_none(spark, bands_dir)
         if sigs_old is not None:
             batch = batch.join(sigs_old.select("doc_id"), "doc_id", "left_anti")
         if not batch.take(1):
             return
-        # shared by band rows + the agreement join: eager localCheckpoint
-        # (rule 17 — inside foreachBatch each batch is its own scope)
-        sigs_new = minhash_signatures(batch).localCheckpoint(eager=True)
-        bands_new = lsh_band_rows(sigs_new).localCheckpoint(eager=True)
-        new_buckets = bands_new.groupBy("band_key").agg(
-            F.collect_list("doc_id").alias("ids"),
-            F.count(F.lit(1)).alias("n_new"),
+        pairs, sigs_out, bands_out = neardup_stage(
+            batch, sig_dir, bands_dir, max_bucket
         )
-        if bands_old is not None:
-            old_sizes = bands_old.groupBy("band_key").agg(
-                F.count(F.lit(1)).alias("n_old")
+        pairs_old = _read_or_none(spark, pairs_dir)
+        if pairs_old is not None:
+            pairs = pairs.join(
+                pairs_old.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
             )
-            new_buckets = new_buckets.join(old_sizes, "band_key", "left").select(
-                "band_key",
-                "ids",
-                "n_new",
-                F.coalesce("n_old", F.lit(0)).alias("n_old"),
-            )
-        else:
-            new_buckets = new_buckets.withColumn("n_old", F.lit(0))
-        # TOTAL bucket size — historical + arriving — mirrors the batch
-        # fold's LSH_MAX_BUCKET accounting (a flood fed one batch at a
-        # time stops producing pairs the moment the bucket crosses the cap)
-        ok = new_buckets.filter(F.col("n_new") + F.col("n_old") <= max_bucket)
-        within = (
-            ok.filter(F.size("ids") >= 2)
-            .select(F.explode("ids").alias("doc_a"), "ids")
-            .select("doc_a", F.explode("ids").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-        )
-        if bands_old is None:
-            cands = within.distinct()
-            all_sigs = sigs_new
-        else:
-            cross = (
-                bands_new.withColumnRenamed("doc_id", "doc_n")
-                .join(ok.select("band_key"), "band_key")
-                .join(bands_old.withColumnRenamed("doc_id", "doc_o"), "band_key")
-                .filter(F.col("doc_o") != F.col("doc_n"))
-                .select(
-                    F.least("doc_o", "doc_n").alias("doc_a"),
-                    F.greatest("doc_o", "doc_n").alias("doc_b"),
-                )
-            )
-            cands = within.unionByName(cross).distinct()
-            all_sigs = sigs_old.unionByName(sigs_new)
-        out = signature_agreement_pairs(cands, all_sigs)
-        out.write.mode("append").parquet(pairs_dir)
-        sigs_new.write.mode("append").parquet(sig_dir)
-        bands_new.write.mode("append").parquet(bands_dir)
+        # the re-delivery guard (signatures) last: a crash before it
+        # replays the batch, and the anti-joins keep the replay's appends
+        # to what the crash left unwritten
+        bands_out.write.mode("append").parquet(bands_dir)
+        pairs.write.mode("append").parquet(pairs_dir)
+        sigs_out.write.mode("append").parquet(sig_dir)
 
     return (
         src.writeStream.foreachBatch(process)

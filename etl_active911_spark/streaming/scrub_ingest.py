@@ -26,7 +26,10 @@ the re-delivery guard). Each micro-batch:
    its occurrences, every other document loses all of its);
 5. per-doc ledger rows via ``scrub_doc_rollup`` — the same arithmetic
    (exact BIGINTs, rule-26b half-up micro-division) as the batch fold;
-6. append the per-doc rows and the NEW ledger claims.
+6. append the NEW ledger claims, then the per-doc rows.
+
+Steps 3-4 are ``segment_ownership``, the one ownership stage the
+composed funnel (streaming/full_ingest.py) runs too.
 
 Stream ≡ batch: segment ownership is append-only (first writer keeps —
 the ledger is never rewritten), so the union of per-doc emissions over
@@ -46,11 +49,13 @@ in batch segments — one ledger equi-join on the uniform md5 key and one
 doc-keyed roll-up; a boilerplate flood makes ledger HITS, not pair
 fan-out.
 
-Exactly-once caveat: plain parquet appends; the re-delivery anti-join
-makes the state appends idempotent, while a crash between the two
-appends could replay per-doc rows — production routes those through the
-keyed upsert sink (streaming/jobs.py, key doc_id), same note as the
-near-dup gate.
+Exactly-once: plain parquet appends over a replayable source. The
+emitted ledger (``out_dir``) is the re-delivery guard, so it is written
+LAST; the claims before it are anti-joined against the segment ledger.
+A crash between the two appends replays the batch: its claims are
+already on disk, so ownership resolves to the same owners, no claim is
+appended twice, and the per-doc rows equal the batch fold's (pinned in
+tests/test_full_ingest.py).
 """
 
 from __future__ import annotations
@@ -62,7 +67,26 @@ from etl_active911_spark.operators.dedup import (
     scrub_doc_rollup,
     scrub_segment_rows,
 )
-from etl_active911_spark.streaming.neardup_ingest import _read_or_none
+from etl_active911_spark.streaming.jobs import _read_or_none
+
+
+def segment_ownership(segs: DataFrame, ledger_dir: str) -> tuple[DataFrame, DataFrame]:
+    """First-writer segment ownership for one micro-batch's segment rows
+    (``seg_md5``, ``doc_id``, ...) against the ledger in ``ledger_dir``. A
+    segment already in the ledger keeps its historical owner; a new one is
+    claimed by the MIN doc_id holding it in this batch. Returns ``(owned,
+    claims)``: ``segs`` joined to its owner (column ``owner_doc``), and the
+    batch's new (seg_md5, owner_doc) ledger rows — localCheckpoint'd and
+    already anti-joined against the ledger, ready for the idempotent
+    append."""
+    led_old = _read_or_none(segs.sparkSession, ledger_dir)
+    claims = segs.groupBy("seg_md5").agg(F.min("doc_id").alias("owner_doc"))
+    if led_old is not None:
+        led_old = led_old.select("seg_md5", "owner_doc")
+        claims = claims.join(led_old, "seg_md5", "left_anti")
+    claims = claims.localCheckpoint(eager=True)  # feeds the verdict and the append
+    owners = claims if led_old is None else claims.unionByName(led_old)
+    return segs.join(owners, "seg_md5"), claims
 
 
 def run_scrub_stream(
@@ -86,28 +110,11 @@ def run_scrub_stream(
         # segment rows feed the ownership aggregate AND the rollup join:
         # eager localCheckpoint (rule 17 — per-batch scope)
         c = scrub_segment_rows(batch).localCheckpoint(eager=True)
-        led_old = _read_or_none(spark, ledger_dir)
-        # within-batch claims for segments NOT already owned
-        claims = c.groupBy("seg_md5").agg(F.min("doc_id").alias("batch_owner"))
-        if led_old is not None:
-            claims = claims.join(
-                led_old.select("seg_md5"), "seg_md5", "left_anti"
-            )
-            owned = led_old.select("seg_md5", F.col("owner_doc").alias("owner"))
-        else:
-            owned = None
-        claims = claims.localCheckpoint(eager=True)  # feeds verdict + append
-        ownership = claims.select(
-            "seg_md5", F.col("batch_owner").alias("owner")
-        )
-        if owned is not None:
-            ownership = ownership.unionByName(owned)
-        verdict = c.join(ownership, "seg_md5")
-        rows = scrub_doc_rollup(verdict, F.col("owner") != F.col("doc_id"))
+        owned, claims = segment_ownership(c, ledger_dir)
+        rows = scrub_doc_rollup(owned, F.col("owner_doc") != F.col("doc_id"))
+        # the re-delivery guard (out_dir) last, as in the composed funnel
+        claims.write.mode("append").parquet(ledger_dir)
         rows.write.mode("append").parquet(out_dir)
-        claims.select(
-            "seg_md5", F.col("batch_owner").alias("owner_doc")
-        ).write.mode("append").parquet(ledger_dir)
 
     return (
         src.writeStream.foreachBatch(process)

@@ -36,9 +36,10 @@ Pipeline (ONE streaming query — contrast full_ingest's pure foreachBatch):
    produce pairs again — counts grow monotonically — so per-key state
    is bounded by cap·(8 B id + 512 B sig), then 8 B).
 4. `foreachBatch`: reassemble per-doc (dropped, text, source), then
-   stages 2-5 VERBATIM via the shared `_stages_2_to_5` — the scrub
-   ledger and verdict rows stay parquet dirs (the verdict item scoped
-   the state-store move to the signature+band state).
+   stages 2-5 via the shared `_stages_2_to_5` (the scrub gate's
+   `segment_ownership` included) — the scrub ledger and verdict rows
+   stay parquet dirs (the verdict item scoped the state-store move to
+   the signature+band state).
 
 Crash-window note: the r14 dir-fold needed explicit state-before-rows
 ordering + self-state anti-joins to make the crash window replayable.
@@ -85,7 +86,7 @@ from etl_active911_spark.operators.similarity import (
     semcontam_eval_block,
 )
 from etl_active911_spark.streaming.full_ingest import _stages_2_to_5
-from etl_active911_spark.streaming.neardup_ingest import _read_or_none
+from etl_active911_spark.streaming.jobs import _read_or_none
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -302,7 +303,6 @@ def run_full_ingest_state_stream(
         if not arriv.take(1):
             return
         rows, claims = _stages_2_to_5(
-            spark,
             arriv.select("doc_id", "source", "text"),
             arriv.filter(F.col("dropped") == 0).select("doc_id", "text"),
             tr_all,
@@ -310,9 +310,7 @@ def run_full_ingest_state_stream(
             ledger_dir,
         )
         # ledger before rows — same crash ordering as the dir fold
-        claims.select(
-            "seg_md5", F.col("batch_owner").alias("owner_doc")
-        ).write.mode("append").parquet(ledger_dir)
+        claims.write.mode("append").parquet(ledger_dir)
         if _CRASH_AFTER_LEDGER:
             raise RuntimeError("injected crash between ledger and rows writes")
         rows.write.mode("append").parquet(out_dir)

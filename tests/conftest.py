@@ -27,7 +27,8 @@ os.environ.setdefault("MALLOC_CONF", "retain:true")
 #: every registered query, the 50-window correctness replica, oracle output
 #: types, plan hygiene, the plan-memo no-data-caching contract, registry
 #: order, bench-harness pins, the r15/r16 optimization plan-shape pins,
-#: and the paper's alert lifecycle: source, transform, HTTP transport).
+#: the paper's alert lifecycle: source, transform, HTTP transport, and the
+#: ingest stages every streaming gate shares, with their crash replays).
 #: A TARGETED run — one that names only test files outside the gate
 #: (`pytest tests/test_streaming.py`, or a `file::test` node id) — runs
 #: them in full. A suite-wide run — one that names a directory, names no
@@ -50,6 +51,7 @@ GATE_MODULES = {
     "test_active911.py",
     "test_source.py",
     "test_http_transport.py",
+    "test_full_ingest.py",
 }
 
 FULL_ENV = "SPARK_GRAFT_FULL_TESTS"

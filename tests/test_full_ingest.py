@@ -1,11 +1,14 @@
 """Composed five-gate ingest (r13, VERDICT r12 item 6): footer-fixture
-pins, the scrub↔PII interaction, segment-wise PII exactness, and the
-stream ≡ composed-batch-fold equivalence over ordered splits."""
+pins, the scrub↔PII interaction, segment-wise PII exactness, the
+stream ≡ composed-batch-fold equivalence over ordered splits, and crash
+replays of the standalone near-dup and scrub gates, whose stages the
+composed stream runs too."""
 
 from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_active911_spark.functions.textpat import (
@@ -457,3 +460,123 @@ def test_funnel_memo_tracks_every_input_table(spark, tmp_path):
     assert ingest_funnel_rows(spark, str(tmp_path)) is first
     os.utime(tmp_path / "embeddings.parquet", (0, 0))
     assert ingest_funnel_rows(spark, str(tmp_path)) is not first, "embeddings rewrite served stale rows"
+
+
+def _drain_crashing(start, n: int) -> None:
+    """Run one drain whose micro-batch dies right after its ``n``-th
+    parquet append, whatever order the gate writes in, then restart it on
+    the same checkpoint: the source re-delivers the uncommitted batch."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+    done: list[str] = []
+
+    def parquet(self, path, *args, **kwargs):
+        if len(done) == n:
+            raise RuntimeError(f"injected crash after {n} appends")
+        real(self, path, *args, **kwargs)
+        done.append(path)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            start().awaitTermination(120)
+    assert len(done) == n, done  # the crash fell between two appends
+    assert start().awaitTermination(120)
+
+
+@pytest.mark.parametrize("n_appends", [1, 2])
+def test_neardup_gate_crash_between_appends_replays_to_fold(spark, tmp_path, n_appends):
+    """The standalone near-dup gate dies after its first or second append
+    of batch 1, and the replayed batch must still converge: batch 2 then
+    discovers its cross-arrival pairs against batch 1's bands, the pair
+    set equals the batch fold, and no state or pair row is appended
+    twice."""
+    from etl_active911_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        signature_agreement_pairs,
+    )
+    from etl_active911_spark.streaming import neardup_ingest
+
+    base = (
+        "the quick brown fox jumps over the lazy dog near the old stone "
+        "well in the cold morning light before the town square fills"
+    )
+    other = (
+        "volcanic islands drift across turquoise water while seabirds "
+        "circle thermal columns hunting silver fish beneath foam crests"
+    )
+    b1 = [(1, base), (2, base + " and vendors"), (3, other)]
+    b2 = [(11, base + " as bells ring"), (12, other + " at golden dusk")]
+    schema = "doc_id long, text string"
+    src_dir, sig_dir, bands_dir, pairs_dir, ckpt = (
+        str(tmp_path / d) for d in ("src", "sigs", "bands", "pairs", "ckpt")
+    )
+
+    def start():
+        src = spark.readStream.schema(schema).parquet(src_dir)
+        return neardup_ingest.run_neardup_stream(
+            src, sig_dir, bands_dir, pairs_dir, ckpt
+        )
+
+    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src_dir)
+    _drain_crashing(start, n_appends)
+    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src_dir)
+    assert start().awaitTermination(120)
+
+    pairs = spark.read.parquet(pairs_dir)
+    got = {(r["doc_a"], r["doc_b"], r["n_matching_hashes"]) for r in pairs.collect()}
+    docs = spark.createDataFrame(b1 + b2, schema)
+    sigs = minhash_signatures(docs).localCheckpoint(eager=True)
+    want = {
+        (r["doc_a"], r["doc_b"], r["n_matching_hashes"])
+        for r in signature_agreement_pairs(
+            lsh_candidate_pairs(docs, sigs=sigs), sigs
+        ).collect()
+    }
+    assert got == want
+    assert {(1, 2), (1, 11), (3, 12)} <= {(a, b) for a, b, _ in got}
+    assert pairs.count() == len(got)
+    sig_rows = spark.read.parquet(sig_dir)
+    assert sig_rows.count() == sig_rows.select("doc_id").distinct().count() == 5
+    bands = spark.read.parquet(bands_dir)
+    assert bands.count() == bands.dropDuplicates(["doc_id", "band_key"]).count()
+
+
+def test_scrub_gate_crash_between_appends_replays_to_fold(spark, tmp_path):
+    """The standalone scrub gate dies between its two appends of batch 1,
+    and the replayed batch must still leave batch 1's segment claims in
+    the ledger: batch 2's copy of a batch-1 segment is scrubbed, the
+    per-doc rows equal the batch fold, and no ledger or out row is
+    appended twice."""
+    from etl_active911_spark.operators.dedup import boilerplate_scrub_ledger
+    from etl_active911_spark.streaming import scrub_ingest
+    from tests.test_streaming import _seg
+
+    A, B, C, D, E = (_seg(t) for t in ("alpha", "beta", "gamma", "delta", "eps"))
+    b1 = [(1, A + " " + B), (2, A + " " + C), (3, D)]
+    b2 = [(11, B + " " + E), (12, E)]
+    schema = "doc_id long, text string"
+    src_dir, ledger_dir, out_dir, ckpt = (
+        str(tmp_path / d) for d in ("src", "ledger", "out", "ckpt")
+    )
+
+    def start():
+        src = spark.readStream.schema(schema).parquet(src_dir)
+        return scrub_ingest.run_scrub_stream(src, ledger_dir, out_dir, ckpt)
+
+    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src_dir)
+    _drain_crashing(start, 1)
+    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src_dir)
+    assert start().awaitTermination(120)
+
+    cols = ("doc_id", "n_tokens", "n_segs", "n_removed_segs", "tokens_after", "removed_share")
+    out = spark.read.parquet(out_dir)
+    got = [tuple(r[c] for c in cols) for r in out.collect()]
+    fold = boilerplate_scrub_ledger(spark.createDataFrame(b1 + b2, schema))
+    assert sorted(got) == sorted(tuple(r[c] for c in cols) for r in fold.collect())
+    assert {t[0]: t[3] for t in got}[11] == 1  # B is still doc 1's
+    ledger = spark.read.parquet(ledger_dir)
+    assert ledger.count() == ledger.select("seg_md5").distinct().count() == 5

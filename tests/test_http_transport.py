@@ -182,6 +182,33 @@ def test_source_end_to_end_over_http(spark, interface_server):
     assert sorted(set(srv.fetch_windows)) == [(7, 1000, 2000), (9, 1000, 2000)]
 
 
+def test_driver_pull_logs_in_once(interface_server):
+    """``Active911Reader.pull`` logs in once and fetches every agency
+    through that one session, as the reference does (task.ts:245-279
+    before the agency loop at task.ts:124); the executor-side ``read``
+    keeps its own login per partition."""
+    srv, url = interface_server
+    from etl_active911_spark.sources.active911_source import (
+        SOURCE_SCHEMA,
+        Active911Reader,
+    )
+
+    rows = Active911Reader(
+        {
+            "transport": "http",
+            "base_url": url,
+            "username": VALID_USER,
+            "password": VALID_PASS,
+            "from_date": "1000",
+            "to_date": "2000",
+        }
+    ).pull()
+    assert len(srv.login_bodies) == 1
+    assert srv.fetch_windows == [(7, 1000, 2000), (9, 1000, 2000)]
+    idx = [SOURCE_SCHEMA.names.index(c) for c in ("id", "agency_id", "_error")]
+    assert [tuple(r[i] for i in idx) for r in rows] == [("101", "7", None)]
+
+
 def test_source_http_allowlist_validation(spark, interface_server):
     _, url = interface_server
     from etl_active911_spark.sources import active911_source

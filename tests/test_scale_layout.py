@@ -516,28 +516,24 @@ def test_partial_topk_plans_windowgrouplimit_partial(spark):
 
 
 def test_bucketed_join_has_no_exchange(spark):
-    """Bucketed layout (operators/bucketing.py): joining two tables
+    """Bucketed layout (``io.write_bucketed``): joining two tables
     bucketed on the same key with the same bucket count must plan a
     SortMergeJoin with ZERO shuffle exchange on either side — the
     write-once/join-forever co-location story SCALE.md claims for
     repeated fact-fact joins. Broadcast is disabled for the assert so
     the planner can't sidestep the demonstration at fixture scale."""
-    from etl_active911_spark.io import read_table
-    from etl_active911_spark.operators.bucketing import (
-        bucketed_equi_join,
-        write_bucketed,
-    )
+    from etl_active911_spark.io import read_table, write_bucketed
 
     orders = read_table(spark, SF_ORACLE, "orders").select("o_orderkey", "o_orderdate")
     lineitem = read_table(spark, SF_ORACLE, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_extendedprice"
     )
-    write_bucketed(orders, "bkt_orders", "o_orderkey", n_buckets=8)
-    write_bucketed(lineitem, "bkt_lineitem", "o_orderkey", n_buckets=8)
+    write_bucketed(orders, "bkt_orders", "o_orderkey", n_buckets=8, sort_col="o_orderkey")
+    write_bucketed(lineitem, "bkt_lineitem", "o_orderkey", n_buckets=8, sort_col="o_orderkey")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_equi_join(spark, "bkt_orders", "bkt_lineitem", "o_orderkey")
+        joined = spark.table("bkt_orders").join(spark.table("bkt_lineitem"), "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan[:1500]
         assert "Exchange" not in plan, plan[:1500]
