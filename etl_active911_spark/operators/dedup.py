@@ -337,49 +337,6 @@ def minhash_signatures(
     )
 
 
-def py_minhash(text: str):
-    """Bit-exact Python replica of ``minhash_signatures`` for ONE document
-    — the signature a STREAMING pipeline computes before a stateful
-    operator (streaming/state_ingest.py), where the groupBy-shaped Spark
-    form would itself be a second stateful aggregation (Spark rejects
-    chaining it into ``applyInPandasWithState``).
-
-    Replication notes (each the exact twin of the Spark column chain):
-    - ``normalized_text``: Java ``\\s`` is ASCII-only ``[ \\t\\n\\x0b\\f\\r]``
-      (Python ``\\s`` is Unicode-aware — NOT equivalent); Spark ``trim``
-      strips only ' '.
-    - ``token_hash60``: ``int(md5hex[:15], 16)`` (CLAUDE.md rule 10).
-    - shingles: ``sequence(1, greatest(n-2, 1))`` ⇒ n-2 trigrams for
-      n ≥ 3, else ONE whole-text shingle.
-    - affine family: A[i]·x < 2⁶² keeps numpy int64 exact.
-    Bit-equality vs the Spark plan is pinned over every fixture doc in
-    tests/test_state_ingest.py.
-    """
-    import hashlib
-    import re
-
-    import numpy as np
-
-    t = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ")
-    toks = t.split(" ")
-    n = len(toks)
-    if n >= 3:
-        shingles = [" ".join(toks[i : i + 3]) for i in range(n - 2)]
-    else:
-        shingles = [t]
-    xs = np.fromiter(
-        (
-            int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % MINHASH_P
-            for s in shingles
-        ),
-        dtype=np.int64,
-        count=len(shingles),
-    )
-    a = np.asarray(_MH_A, dtype=np.int64)[:, None]
-    b = np.asarray(_MH_B, dtype=np.int64)[:, None]
-    return ((a * xs[None, :] + b) % MINHASH_P).min(axis=1)
-
-
 #: Hot-bucket guard (VERDICT r04 item 2): a band bucket larger than this is
 #: DROPPED from candidate generation. A bucket of n docs fans out n²/2
 #: pairs, so one boilerplate flood (10⁵ identical licence pages share every

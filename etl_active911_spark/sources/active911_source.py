@@ -224,4 +224,18 @@ class Active911DataSource(DataSource):
 
 
 def register(spark) -> None:
-    spark.dataSource.register(Active911DataSource)
+    """Register ``format("active911")`` in ``spark``. Spark checks the name
+    against the thread's ACTIVE session, so registering in a second
+    session of the application, with another one active that already
+    has it, would raise ``DATA_SOURCE_ALREADY_EXISTS``; ``spark`` is made
+    active for the call and the previous active session restored."""
+    jvm = spark._jvm.SparkSession
+    active = jvm.getActiveSession()
+    jvm.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(Active911DataSource)
+    finally:
+        if active.isDefined():
+            jvm.setActiveSession(active.get())
+        else:
+            jvm.clearActiveSession()

@@ -17,8 +17,9 @@ Stream ≡ batch: the verdict is a pure per-row function of (arriving
 vector, eval block) — no cross-arrival state at all — so the union of
 emissions over ANY arrival split equals the batch fold exactly (no
 ordering caveat, no flood regime: the strongest equivalence contract in
-the ingest family; pinned in tests/test_streaming.py). Re-delivered
-vec_ids are anti-joined against the emitted verdicts so replays append
+the ingest family; pinned in tests/test_streaming.py). The ingest
+gates' one re-delivery guard (``jobs.unseen_arrivals``, key vec_id)
+drops vec_ids already in the emitted verdicts, so replays append
 nothing.
 
 Exactly-once caveat: plain parquet appends, same note as the sibling
@@ -31,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from etl_active911_spark.operators.similarity import train_contamination_rows
-from etl_active911_spark.streaming.jobs import _read_or_none
+from etl_active911_spark.streaming.jobs import unseen_arrivals
 
 
 def run_contamination_stream(
@@ -47,12 +48,8 @@ def run_contamination_stream(
     (availableNow trigger, the house ingest harness)."""
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.dropDuplicates(["vec_id"])
-        prior = _read_or_none(spark, out_dir)
-        if prior is not None:
-            batch = batch.join(prior.select("vec_id"), "vec_id", "left_anti")
-        if not batch.take(1):
+        batch = unseen_arrivals(batch, "vec_id", out_dir)
+        if batch is None:
             return
         rows = train_contamination_rows(
             batch.select("vec_id", "embedding"), eval_block

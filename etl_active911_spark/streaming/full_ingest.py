@@ -26,8 +26,9 @@ Out-of-order arrivals diverge one-sidedly at the near-dup and scrub
 stages exactly as documented in their standalone modules. Pinned in
 tests/test_full_ingest.py (one-batch and 3-way ordered splits).
 
-Exactly-once: plain parquet appends with the anti-join re-delivery
-guard (``out_dir``), written LAST (ADVICE r13 item 1): the state dirs
+Exactly-once: plain parquet appends behind the ingest gates' one
+re-delivery guard (``jobs.unseen_arrivals`` on ``out_dir``, key
+``doc_id``); ``out_dir`` is written LAST (ADVICE r13 item 1): the state dirs
 (signatures, bands, segment claims) come first, and each state append
 anti-joins what is already on disk — so a crash anywhere between the
 four writes replays to the same verdicts with no duplicate state. The
@@ -55,54 +56,9 @@ from etl_active911_spark.operators.similarity import (
     train_contamination_rows,
 )
 from etl_active911_spark.operators.textual import gopher_stats
-from etl_active911_spark.streaming.jobs import _read_or_none
+from etl_active911_spark.streaming.jobs import unseen_arrivals
 from etl_active911_spark.streaming.neardup_ingest import neardup_stage
 from etl_active911_spark.streaming.scrub_ingest import segment_ownership
-
-
-def _stages_2_to_5(
-    batch: DataFrame,
-    surv: DataFrame,
-    tr_all: DataFrame,
-    ev: DataFrame,
-    ledger_dir: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Stages 2-5 of the composed funnel over ONE micro-batch — scrub
-    (first-writer segment ledger) → PII on kept segments → quality →
-    contamination — shared by the dir-state fold below and the
-    state-store twin (streaming/state_ingest.py), so the two paths
-    cannot drift anywhere downstream of the near-dup verdict. ``batch``
-    = every arrival (doc_id, source, text); ``surv`` = stage-1
-    survivors (doc_id, text). Returns (verdict rows, this batch's new
-    (seg_md5, owner_doc) ledger claims, ready for the idempotent
-    append — see ``segment_ownership``)."""
-    arrv = surv.select("doc_id", ingest_arrival_text().alias("text"))
-    c = scrub_segment_rows(arrv, with_text=True).localCheckpoint(eager=True)
-    owned, claims = segment_ownership(c, ledger_dir)
-    flagged = owned.select(
-        "doc_id", "n", "n_tok", "seg_txt",
-        (F.col("owner_doc") != F.col("doc_id")).alias("removed"),
-    )
-    ledger = scrub_pii_rollup(flagged)
-
-    # --- stage 4: quality (stateless per batch) ---
-    quality = gopher_stats(batch.select("doc_id", "text")).select(
-        "doc_id", F.col("keep").cast("int").alias("fq")
-    )
-
-    # --- stage 5: contamination (stateless; broadcast eval block) ---
-    tr_batch = tr_all.join(
-        batch.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-    )
-    contam = train_contamination_rows(tr_batch, ev).select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("quarantined").alias("ct_q"),
-    )
-
-    rows = funnel_flag_rows(
-        batch.select("doc_id", "source"), ledger, quality, contam
-    )
-    return rows, claims
 
 
 def run_full_ingest_stream(
@@ -129,12 +85,8 @@ def run_full_ingest_stream(
     tr_all = emb.filter(~is_eval).select("vec_id", "embedding")
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id"])
-        out_old = _read_or_none(spark, out_dir)
-        if out_old is not None:
-            batch = batch.join(out_old.select("doc_id"), "doc_id", "left_anti")
-        if not batch.take(1):
+        batch = unseen_arrivals(batch, "doc_id", out_dir)
+        if batch is None:
             return
         batch = batch.localCheckpoint(eager=True)  # feeds all five stages
 
@@ -151,9 +103,34 @@ def run_full_ingest_stream(
         )
         surv = batch.join(dropped, "doc_id", "left_anti")
 
-        # --- stages 2-5: shared with the state-store twin ---
-        rows, claims = _stages_2_to_5(
-            batch, surv.select("doc_id", "text"), tr_all, ev, ledger_dir
+        # --- stages 2-3: scrub (scrub_ingest.segment_ownership) on the
+        # survivors' arriving text, then PII on the kept segments ---
+        arrv = surv.select("doc_id", ingest_arrival_text().alias("text"))
+        c = scrub_segment_rows(arrv, with_text=True).localCheckpoint(eager=True)
+        owned, claims = segment_ownership(c, ledger_dir)
+        ledger = scrub_pii_rollup(
+            owned.select(
+                "doc_id", "n", "n_tok", "seg_txt",
+                (F.col("owner_doc") != F.col("doc_id")).alias("removed"),
+            )
+        )
+
+        # --- stage 4: quality (stateless per batch) ---
+        quality = gopher_stats(batch.select("doc_id", "text")).select(
+            "doc_id", F.col("keep").cast("int").alias("fq")
+        )
+
+        # --- stage 5: contamination (stateless; broadcast eval block) ---
+        tr_batch = tr_all.join(
+            batch.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
+        )
+        contam = train_contamination_rows(tr_batch, ev).select(
+            F.col("vec_id").alias("doc_id"),
+            F.col("quarantined").alias("ct_q"),
+        )
+
+        rows = funnel_flag_rows(
+            batch.select("doc_id", "source"), ledger, quality, contam
         )
         # State BEFORE verdict rows, each append idempotent (ADVICE r13
         # item 1): the out_dir re-delivery guard suppresses replay once

@@ -234,6 +234,20 @@ def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
+def unseen_arrivals(batch: DataFrame, key: str, guard_dir: str) -> DataFrame | None:
+    """The re-delivery guard every ingest gate runs first: ``batch`` with
+    one row per ``key`` and none whose ``key`` is already in ``guard_dir``,
+    or ``None`` when no arrival is left. A replayable source plus this
+    idempotent sink is Structured Streaming's exactly-once recipe (SIGMOD
+    2018): a gate writes ``guard_dir`` LAST, after its state, so a
+    re-delivered arrival appends nothing once its rows are on disk."""
+    batch = batch.dropDuplicates([key])
+    seen = _read_or_none(batch.sparkSession, guard_dir)
+    if seen is not None:
+        batch = batch.join(seen.select(key), key, "left_anti")
+    return batch if batch.take(1) else None
+
+
 def run_upsert_to_parquet(
     stream_df: DataFrame,
     out_dir: str,

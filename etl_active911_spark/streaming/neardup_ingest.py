@@ -12,7 +12,8 @@ per-batch work is |batch| signature computation + aggregates/joins
 against pre-materialized index rows, never a recompute over history.
 Each micro-batch:
 
-1. drop re-delivered doc_ids (anti-join against the signature store —
+1. drop re-delivered doc_ids against the signature store
+   (``jobs.unseen_arrivals``, the ingest gates' one re-delivery guard —
    the store is first-writer-wins, which also makes a replayed batch
    emit no self-pairs; re-ingest-as-update would route through the keyed
    upsert sink instead);
@@ -60,7 +61,7 @@ from etl_active911_spark.operators.dedup import (
     minhash_signatures,
     signature_agreement_pairs,
 )
-from etl_active911_spark.streaming.jobs import _read_or_none
+from etl_active911_spark.streaming.jobs import _read_or_none, unseen_arrivals
 
 
 def neardup_stage(
@@ -143,17 +144,13 @@ def run_neardup_stream(
     parameterized so tests can pin the flood guard at toy scale."""
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id"])
-        sigs_old = _read_or_none(spark, sig_dir)
-        if sigs_old is not None:
-            batch = batch.join(sigs_old.select("doc_id"), "doc_id", "left_anti")
-        if not batch.take(1):
+        batch = unseen_arrivals(batch, "doc_id", sig_dir)
+        if batch is None:
             return
         pairs, sigs_out, bands_out = neardup_stage(
             batch, sig_dir, bands_dir, max_bucket
         )
-        pairs_old = _read_or_none(spark, pairs_dir)
+        pairs_old = _read_or_none(batch.sparkSession, pairs_dir)
         if pairs_old is not None:
             pairs = pairs.join(
                 pairs_old.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"

@@ -13,8 +13,9 @@ the PII_QUARANTINE_MIN threshold cannot drift between batch and stream.
 Stream ≡ batch: no cross-arrival state, so the union of emitted verdict
 rows over ANY arrival split equals the batch verdict table exactly, and
 their source-grouped aggregate equals the registered fold (pinned in
-tests/test_pii_ingest.py, including a replayed batch). Re-delivered
-doc_ids are anti-joined against the emitted verdicts so replays append
+tests/test_pii_ingest.py, including a replayed batch). The ingest
+gates' one re-delivery guard (``jobs.unseen_arrivals``, key doc_id)
+drops doc_ids already in the emitted verdicts, so replays append
 nothing.
 
 Exactly-once caveat: plain parquet appends, same note as the sibling
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from etl_active911_spark.operators.textual import pii_verdict_rows
-from etl_active911_spark.streaming.jobs import _read_or_none
+from etl_active911_spark.streaming.jobs import unseen_arrivals
 
 
 def run_pii_stream(
@@ -40,12 +41,8 @@ def run_pii_stream(
     harness)."""
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id"])
-        prior = _read_or_none(spark, out_dir)
-        if prior is not None:
-            batch = batch.join(prior.select("doc_id"), "doc_id", "left_anti")
-        if not batch.take(1):
+        batch = unseen_arrivals(batch, "doc_id", out_dir)
+        if batch is None:
             return
         pii_verdict_rows(batch).write.mode("append").parquet(out_dir)
 

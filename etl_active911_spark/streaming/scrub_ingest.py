@@ -12,7 +12,8 @@ exactly the index the 100 TB design stores anyway: one
 plus the emitted per-doc scrub ledgers (``out_dir``, which doubles as
 the re-delivery guard). Each micro-batch:
 
-1. drop re-delivered doc_ids (anti-join against the emitted ledger —
+1. drop re-delivered doc_ids against the emitted ledger
+   (``jobs.unseen_arrivals``, the ingest gates' one re-delivery guard —
    first-writer-wins, so a replayed batch cannot re-claim or re-scrub);
 2. segment rows for the arriving docs via ``scrub_segment_rows`` — the
    SAME chunker the batch fold uses (shared-helper discipline, the
@@ -67,7 +68,7 @@ from etl_active911_spark.operators.dedup import (
     scrub_doc_rollup,
     scrub_segment_rows,
 )
-from etl_active911_spark.streaming.jobs import _read_or_none
+from etl_active911_spark.streaming.jobs import _read_or_none, unseen_arrivals
 
 
 def segment_ownership(segs: DataFrame, ledger_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -100,12 +101,8 @@ def run_scrub_stream(
     semantics, the ann_ingest/neardup_ingest harness)."""
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id"])
-        out_old = _read_or_none(spark, out_dir)
-        if out_old is not None:
-            batch = batch.join(out_old.select("doc_id"), "doc_id", "left_anti")
-        if not batch.take(1):
+        batch = unseen_arrivals(batch, "doc_id", out_dir)
+        if batch is None:
             return
         # segment rows feed the ownership aggregate AND the rollup join:
         # eager localCheckpoint (rule 17 — per-batch scope)

@@ -186,11 +186,10 @@ def test_full_ingest_stream_matches_batch(spark, tmp_path):
     # replay batch 1: the re-delivery guard must add nothing
     batches[0].coalesce(1).write.mode("append").parquet(src_dir)
     _drain(spark, src_dir, emb, dirs)
-    again = {
-        tuple(r[c] for c in ROW_COLS)
-        for r in spark.read.parquet(dirs[3]).collect()
-    }
+    out = spark.read.parquet(dirs[3])
+    again = {tuple(r[c] for c in ROW_COLS) for r in out.collect()}
     assert again == want
+    assert out.count() == len(again)  # a set hides re-appended rows
 
 
 def test_every_arrival_yields_a_segment_row(spark):

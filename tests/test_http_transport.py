@@ -352,6 +352,33 @@ def test_control_stream_keeps_source_registered(spark, submit_server, tmp_path, 
     assert [r["id"] for r in read.collect()] == ["42"]
 
 
+def test_control_stream_runs_in_a_second_session(spark, submit_server, tmp_path):
+    """A run in a new session of the application, after the fixture
+    session registered ``active911``, POSTs the same bodies and leaves
+    ``format("active911")`` loadable there: Spark checks a data source's
+    name against the active session, not the one it registers in."""
+    from etl_active911_spark.streaming.jobs import run_control_stream
+    from tests.test_source import ALERT
+
+    d = tmp_path / "wire"
+    d.mkdir()
+    (d / "agency_1.jsonp").write_text(encode_wire_payload([ALERT]))
+    srv, url = submit_server
+    bodies = []
+    for i, session in enumerate((spark, spark.newSession())):
+        srv.raw_posts.clear()
+        run_control_stream(
+            session,
+            url,
+            checkpoint_dir=str(tmp_path / f"ckpt{i}"),
+            source_options={"fixture_dir": str(d), "max_pulls": "1"},
+        )
+        bodies.append(list(srv.raw_posts))
+    assert bodies[0] and bodies[1] == bodies[0]
+    read = session.read.format("active911").option("fixture_dir", str(d)).load()
+    assert [r["id"] for r in read.collect()] == ["42"]
+
+
 def test_checkpoint_writes_use_filesystem_manager(spark, tmp_path):
     """Streaming checkpoints go through the FileSystem API: without the
     native Hadoop library the default FileContext manager forks a shell
