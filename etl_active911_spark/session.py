@@ -9,13 +9,43 @@ Arrow on (vectorized Python boundary), and explicit shuffle partitioning.
 from __future__ import annotations
 
 import os
+import subprocess
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # At 100 TB this would be set to ~2-3x total executor cores; AQE coalesces
 # down when partitions are small, so erring high is safe. Locally 32 matches
-# the driver's local[32] harness.
+# the driver's local[32] harness. `io.spread` does not read it: its exchange
+# is sized to the task slots (`defaultParallelism`).
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+#: Python worker daemon that skips re-reading unchanged import archives on
+#: every task (see its docstring).
+DAEMON_MODULE = "etl_active911_spark.pyworker"
+
+#: Run in a child started the way Spark starts a Python worker (same
+#: interpreter, working directory and PYTHONPATH): exit 0 when the worker
+#: could find ``DAEMON_MODULE``. It locates the package without importing
+#: it, so the probe never imports pyspark.
+_DAEMON_PROBE = """
+import importlib.util, os, sys
+spec = importlib.util.find_spec("etl_active911_spark")
+dirs = (spec and spec.submodule_search_locations) or ()
+sys.exit(not any(os.path.isfile(os.path.join(d, "pyworker.py")) for d in dirs))
+"""
+
+
+def daemon_module_found(cwd: str) -> bool:
+    """True when a Python worker started in ``cwd`` can run ``DAEMON_MODULE``."""
+    try:
+        probe = subprocess.run(
+            [os.environ.get("PYSPARK_PYTHON", "python3"), "-c", _DAEMON_PROBE],
+            cwd=cwd, capture_output=True, timeout=60,
+        )
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+    return probe.returncode == 0
 
 
 def get_spark(app_name: str = "etl-active911-spark", master: str | None = None) -> SparkSession:
@@ -55,4 +85,13 @@ def get_spark(app_name: str = "etl-active911-spark", master: str | None = None) 
             "FileSystemBasedCheckpointFileManager",
         )
     )
+    # A worker daemon is chosen when the SparkContext starts; a worker
+    # that cannot find the module would fail every Python task, so the
+    # stock daemon stays unless the probe finds it. Workers start in the
+    # JVM's working directory, and a JVM outlives `spark.stop()`.
+    if SparkContext._active_spark_context is None:
+        jvm = SparkContext._jvm
+        cwd = jvm.System.getProperty("user.dir") if jvm is not None else os.getcwd()
+        if daemon_module_found(cwd):
+            builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     return builder.getOrCreate()

@@ -29,8 +29,9 @@ os.environ.setdefault("MALLOC_CONF", "retain:true")
 #: order, bench-harness pins, the r15/r16 optimization plan-shape pins,
 #: the paper's alert lifecycle: source, transform, HTTP transport, the
 #: ingest stages every streaming gate shares, with their crash replays,
-#: and the stateless PII gate's replay through the shared re-delivery
-#: guard).
+#: the stateless PII gate's replay through the shared re-delivery
+#: guard, and the Python worker daemon with its fallback to the stock
+#: one).
 #: A TARGETED run — one that names only test files outside the gate
 #: (`pytest tests/test_streaming.py`, or a `file::test` node id) — runs
 #: them in full. A suite-wide run — one that names a directory, names no
@@ -55,6 +56,7 @@ GATE_MODULES = {
     "test_http_transport.py",
     "test_full_ingest.py",
     "test_pii_ingest.py",
+    "test_pyworker.py",
 }
 
 FULL_ENV = "SPARK_GRAFT_FULL_TESTS"

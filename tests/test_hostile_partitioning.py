@@ -4,8 +4,11 @@ not depend on how many partitions the data happens to arrive in — the
 property a 1000-executor cluster exercises on every run. This sweep
 re-checks oracle parity for the window/prefix-sum/explode-shaped r7
 queries under a hostile shuffle-partition count (prime, tiny) with AQE
-coalescing disabled, so every shuffle actually lands in 7 partitions
-instead of the tuned 32."""
+coalescing disabled, so every shuffle Spark sizes from
+``spark.sql.shuffle.partitions`` (aggregates, joins, windows) lands in 7
+partitions instead of the tuned 32. ``io.spread``'s exchanges keep their
+own size, the task-slot count, so a query that spreads is checked with
+both partition counts in one plan."""
 
 from __future__ import annotations
 

@@ -346,3 +346,28 @@ def test_alert_transform_evaluates_each_regex_once(spark):
     counts = {k: len(re.findall(rf"\b{k}\b", plan, re.IGNORECASE)) for k in TRANSFORM_REGEX_NODES}
     for k, cap in TRANSFORM_REGEX_NODES.items():
         assert 0 < counts[k] <= cap, f"{k}: {counts[k]} nodes planned, ceiling {cap} — {counts}"
+
+
+def test_spread_sized_to_task_slots(spark):
+    """`io.spread` repartitions to the task slots, not to
+    ``spark.sql.shuffle.partitions``: both forms land in
+    ``defaultParallelism`` partitions under a hostile shuffle conf, and the
+    keyed form still hash-partitions, so ``groupBy(key)`` after it plans
+    exactly one Exchange (CLAUDE.md rule 20)."""
+    from pyspark.sql import functions as F
+
+    from etl_active911_spark.io import spread
+
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        df = spark.range(100).withColumn("k", F.col("id") % 5)
+        assert spread(df).rdd.getNumPartitions() == slots
+        keyed = spread(df, "k")
+        assert keyed.rdd.getNumPartitions() == slots
+        plan = keyed.groupBy("k").count()._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert "hashpartitioning(k#" in plan and f", {slots})" in plan, plan
