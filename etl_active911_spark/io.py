@@ -64,8 +64,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition to the task slots (``defaultParallelism``) — round-robin
-    by default, HASH-partitioned when key columns are given.
+    """Repartition so every task slot gets rows — round-robin to the slot
+    count (``defaultParallelism``) by default, HASH-partitioned to
+    ``max(slots, spark.sql.shuffle.partitions)`` when key columns are
+    given.
 
     The fixture tables are single parquet files → Spark reads them as ONE
     partition, serializing any CPU-heavy per-row work (measured: the whole
@@ -74,15 +76,12 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     arrive pre-split, and this becomes a no-op-sized safeguard for
     small/skewed file sets.
 
-    The exchange is sized to the slots, not to
-    ``spark.sql.shuffle.partitions``: a spread exists to put rows on every
+    The round-robin form is sized to the slots, not to
+    ``spark.sql.shuffle.partitions``: it exists to put rows on every
     slot, and more partitions than slots only add tasks (AQE never
     coalesces a repartition to an explicit count). On ``local[4]`` a
     32-way spread ran 32-task stages over 1k rows; ``x3_cosine_topk``
-    went 0.58-0.65 → 0.38-0.42 s per pass at 4 slots. The slot count is
-    fixed for the life of a SparkContext, so a memoized plan
-    (``plans.cache.plan_memo``) never holds a stale count. On a
-    ``local[32]`` host the count is 32, as before.
+    went 0.58-0.65 → 0.38-0.42 s per pass at 4 slots.
 
     Passing key columns makes the exchange do double duty: narrow ops
     (project/filter/explode) preserve hash partitioning, so a downstream
@@ -90,9 +89,22 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     exchange — e.g. the MinHash signature aggregate goes from 2 exchanges
     to 1 when documents are spread by ``doc_id`` before the shingle
     explode (the per-doc explosion is what the parallelism is for, and
-    the aggregate runs where the rows already live)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *cols) if cols else df.repartition(n)
+    the aggregate runs where the rows already live). That is why the
+    keyed form never drops below ``spark.sql.shuffle.partitions``: an
+    equi-join re-shuffles BOTH sides when a hash-partitioned child has
+    fewer partitions than the conf (``x9_curation_v6`` planned 9 → 10
+    exchanges on ``local[4]`` with a slot-sized keyed spread). A spread
+    whose key no downstream operator uses should be round-robin.
+
+    Both counts are read when the plan is built. The slot count can change
+    during an application (executors joining or leaving a cluster) and the
+    conf can be set mid-session, so ``plans.cache.plan_memo`` keys on both."""
+    spark = df.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    if not cols:
+        return df.repartition(slots)
+    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return df.repartition(max(slots, conf), *cols)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

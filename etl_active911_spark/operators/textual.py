@@ -1586,7 +1586,9 @@ def x4_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape stays locally; the rewrite is the documented 100 TB remedy."""
     from etl_active911_spark.operators.dedup import tokens
 
-    docs = spread(read_table(spark, sf_dir, "documents"), "doc_id")
+    # Round-robin: the w1 windows re-shuffle the stream, so no operator
+    # downstream uses a doc_id partitioning.
+    docs = spread(read_table(spark, sf_dir, "documents"))
     # size >= 1 guard (ADVICE r15): tokens()=split() never returns an
     # empty array today, but if it ever scrubs empties natively (as the
     # PMI/countmin pairing does with array_remove), size=0 would make

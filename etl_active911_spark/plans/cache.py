@@ -169,11 +169,12 @@ _QPLAN_MEMO: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 def plan_memo(name: str, spark, sf_dir: str, builder, table: str = "documents") -> DataFrame:
     """Memoize an ANALYZED DataFrame plan per (name, application,
-    sf_dir, session timezone), invalidated when the backing fixture
-    table changes — for any query (or shared fixture plan, e.g.
-    ``pipeline.fixtures.synthetic_alerts``) whose per-call cost is
-    dominated by driver-side plan construction (rule 35: parquet footer
-    + file listing + py4j Column trees re-paid every invocation). NO
+    sf_dir, session timezone, task slots, shuffle partitions), invalidated
+    when the backing fixture table changes — for any query (or shared
+    fixture plan, e.g. ``pipeline.fixtures.synthetic_alerts``) whose
+    per-call cost is dominated by driver-side plan construction (rule
+    35: parquet footer + file listing + py4j Column trees re-paid every
+    invocation). NO
     data is materialized: every execution still runs the full pipeline;
     only the immutable analyzed plan is reused.
 
@@ -186,10 +187,17 @@ def plan_memo(name: str, spark, sf_dir: str, builder, table: str = "documents") 
     # events reader and analysis-time timestamp resolution embed the
     # SESSION zone into the analyzed plan, and the hostile-TZ sweep flips
     # the conf mid-session — a UTC-built plan must never serve a
-    # Tokyo-session call.
-    tz = spark.conf.get("spark.sql.session.timeZone")
+    # Tokyo-session call. The partition counts ``io.spread`` embeds are
+    # part of it too: the task-slot count (it changes as executors join or
+    # leave a cluster) and the shuffle conf (the hostile-partitioning
+    # sweep sets it mid-session).
+    key_extra = (
+        spark.conf.get("spark.sql.session.timeZone"),
+        spark.sparkContext.defaultParallelism,
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
     got = _lookup(
-        _QPLAN_MEMO, name, spark, sf_dir, table, builder, holds_data=False, key_extra=(tz,)
+        _QPLAN_MEMO, name, spark, sf_dir, table, builder, holds_data=False, key_extra=key_extra
     )
     # Return a FRESH Dataset over the memoized ANALYZED subtree, never the
     # stored object itself (r15 close-out fix): a Dataset's

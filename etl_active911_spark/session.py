@@ -9,20 +9,25 @@ Arrow on (vectorized Python boundary), and explicit shuffle partitioning.
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 
-from pyspark import SparkContext
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # At 100 TB this would be set to ~2-3x total executor cores; AQE coalesces
 # down when partitions are small, so erring high is safe. Locally 32 matches
-# the driver's local[32] harness. `io.spread` does not read it: its exchange
-# is sized to the task slots (`defaultParallelism`).
+# the driver's local[32] harness. `io.spread` sizes its round-robin exchange
+# to the task slots (`defaultParallelism`) instead, and its keyed one to the
+# larger of the two.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 #: Python worker daemon that skips re-reading unchanged import archives on
 #: every task (see its docstring).
 DAEMON_MODULE = "etl_active911_spark.pyworker"
+
+#: Masters whose Python workers run on this host, forked by the driver JVM.
+LOCAL_MASTER = re.compile(r"local(\[.*\])?")
 
 #: Run in a child started the way Spark starts a Python worker (same
 #: interpreter, working directory and PYTHONPATH): exit 0 when the worker
@@ -36,16 +41,26 @@ sys.exit(not any(os.path.isfile(os.path.join(d, "pyworker.py")) for d in dirs))
 """
 
 
-def daemon_module_found(cwd: str) -> bool:
-    """True when a Python worker started in ``cwd`` can run ``DAEMON_MODULE``."""
+def daemon_module_found(python: str, cwd: str) -> bool:
+    """True when a Python worker run by ``python`` in ``cwd`` can run
+    ``DAEMON_MODULE``."""
     try:
         probe = subprocess.run(
-            [os.environ.get("PYSPARK_PYTHON", "python3"), "-c", _DAEMON_PROBE],
-            cwd=cwd, capture_output=True, timeout=60,
+            [python, "-c", _DAEMON_PROBE], cwd=cwd, capture_output=True, timeout=60
         )
     except (OSError, subprocess.TimeoutExpired):
         return False
     return probe.returncode == 0
+
+
+def worker_pythons(conf: SparkConf) -> set[str]:
+    """The interpreters a local Python worker may run: PySpark's own choice
+    (``PYSPARK_PYTHON``, else ``python3``) for RDD functions and, when
+    ``conf`` sets one, ``spark.sql.execution.pyspark.python`` or else
+    ``spark.pyspark.python`` for SQL UDFs."""
+    keys = ("spark.sql.execution.pyspark.python", "spark.pyspark.python")
+    sql = next((conf.get(k) for k in keys if conf.contains(k)), None)
+    return {os.environ.get("PYSPARK_PYTHON", "python3")} | ({sql} if sql else set())
 
 
 def get_spark(app_name: str = "etl-active911-spark", master: str | None = None) -> SparkSession:
@@ -87,11 +102,18 @@ def get_spark(app_name: str = "etl-active911-spark", master: str | None = None) 
     )
     # A worker daemon is chosen when the SparkContext starts; a worker
     # that cannot find the module would fail every Python task, so the
-    # stock daemon stays unless the probe finds it. Workers start in the
-    # JVM's working directory, and a JVM outlives `spark.stop()`.
-    if SparkContext._active_spark_context is None:
-        jvm = SparkContext._jvm
-        cwd = jvm.System.getProperty("user.dir") if jvm is not None else os.getcwd()
-        if daemon_module_found(cwd):
+    # stock daemon stays unless the probe finds it. The probe runs on this
+    # host, so it stands for the workers only in local mode (not
+    # local-cluster, whose executors run in their own work dirs); a
+    # cluster keeps the stock daemon. Local workers start in the JVM's
+    # working directory, and a JVM outlives `spark.stop()`.
+    if LOCAL_MASTER.fullmatch(master) and SparkContext._active_spark_context is None:
+        # Start the JVM with the builder's settings, as getOrCreate would,
+        # so that SparkConf() also holds spark-submit's and
+        # spark-defaults.conf's.
+        launch = SparkConf(loadDefaults=False).setAll(builder._options.items())
+        SparkContext._ensure_initialized(conf=launch)
+        cwd = SparkContext._jvm.System.getProperty("user.dir")
+        if all(daemon_module_found(p, cwd) for p in worker_pythons(SparkConf())):
             builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     return builder.getOrCreate()

@@ -6,9 +6,10 @@ re-checks oracle parity for the window/prefix-sum/explode-shaped r7
 queries under a hostile shuffle-partition count (prime, tiny) with AQE
 coalescing disabled, so every shuffle Spark sizes from
 ``spark.sql.shuffle.partitions`` (aggregates, joins, windows) lands in 7
-partitions instead of the tuned 32. ``io.spread``'s exchanges keep their
-own size, the task-slot count, so a query that spreads is checked with
-both partition counts in one plan."""
+partitions instead of the tuned 32. ``io.spread``'s round-robin
+exchanges keep their own size, the task-slot count, and its keyed ones
+take the larger of the slot count and 7, so a query that spreads may be
+checked with two partition counts in one plan."""
 
 from __future__ import annotations
 

@@ -349,25 +349,56 @@ def test_alert_transform_evaluates_each_regex_once(spark):
 
 
 def test_spread_sized_to_task_slots(spark):
-    """`io.spread` repartitions to the task slots, not to
-    ``spark.sql.shuffle.partitions``: both forms land in
-    ``defaultParallelism`` partitions under a hostile shuffle conf, and the
-    keyed form still hash-partitions, so ``groupBy(key)`` after it plans
-    exactly one Exchange (CLAUDE.md rule 20)."""
+    """`io.spread`'s round-robin form repartitions to the task slots
+    (``defaultParallelism``), not to ``spark.sql.shuffle.partitions``; the
+    keyed form never drops below the conf, so ``groupBy(key)`` after it
+    plans exactly one Exchange and an equi-join of two keyed spreads
+    re-shuffles neither side (CLAUDE.md rule 20)."""
     from pyspark.sql import functions as F
 
     from etl_active911_spark.io import spread
 
     slots = spark.sparkContext.defaultParallelism
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots + 3))
     try:
         df = spark.range(100).withColumn("k", F.col("id") % 5)
         assert spread(df).rdd.getNumPartitions() == slots
         keyed = spread(df, "k")
-        assert keyed.rdd.getNumPartitions() == slots
-        plan = keyed.groupBy("k").count()._jdf.queryExecution().executedPlan().toString()
+        assert keyed.rdd.getNumPartitions() == slots + 3
+        agg = keyed.groupBy("k").count()._jdf.queryExecution().executedPlan().toString()
+        other = spread(df.select(F.col("k"), F.col("id").alias("id2")), "k")
+        join = keyed.join(other, "k")._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
-    assert "hashpartitioning(k#" in plan and f", {slots})" in plan, plan
+    assert len(re.findall(r"\bExchange\b", agg)) == 1, agg
+    assert "hashpartitioning(k#" in agg and f", {slots + 3})" in agg, agg
+    assert len(re.findall(r"\bExchange\b", join)) == 2, join
+
+
+def test_plan_memo_rebuilds_when_spread_counts_change(spark, tmp_path):
+    """A memoized plan embeds `io.spread`'s partition count, so
+    `plan_memo` rebuilds it when the shuffle conf changes rather than
+    serving the count of its first build."""
+    from etl_active911_spark.io import spread
+    from etl_active911_spark.plans.cache import plan_memo
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spread(spark.range(100), "id")
+
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(slots + 1))
+        plan_memo("hygiene.spread_memo", spark, str(tmp_path), build)
+        plan_memo("hygiene.spread_memo", spark, str(tmp_path), build)
+        assert len(builds) == 1
+        spark.conf.set("spark.sql.shuffle.partitions", str(slots + 3))
+        df = plan_memo("hygiene.spread_memo", spark, str(tmp_path), build)
+        assert len(builds) == 2
+        assert df.rdd.getNumPartitions() == slots + 3
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

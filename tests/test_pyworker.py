@@ -18,7 +18,12 @@ import zipimport
 import pytest
 
 from etl_active911_spark import pyworker
-from etl_active911_spark.session import DAEMON_MODULE, daemon_module_found
+from etl_active911_spark.session import (
+    DAEMON_MODULE,
+    LOCAL_MASTER,
+    daemon_module_found,
+    worker_pythons,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -106,6 +111,21 @@ def test_deleted_archive_behaves_as_stock(tmp_path):
     assert _load(a, "m1").VALUE == 3
 
 
+def test_recorded_signature_skips_the_first_read(tmp_path, reads, monkeypatch):
+    archive = str(tmp_path / "lib.zip")
+    _write_archive(archive, {"m1": "VALUE = 1\n"})
+    importer = zipimport.zipimporter(archive)
+    monkeypatch.setitem(sys.path_importer_cache, archive, importer)
+    reads.clear()
+    pyworker.record_signatures()
+    pyworker.invalidate_caches(importer)
+    assert reads == []
+    _write_archive(archive, {"m1": "VALUE = 2\n"})
+    pyworker.invalidate_caches(importer)
+    assert reads == [archive]
+    assert _load(importer, "m1").VALUE == 2
+
+
 def test_python_tasks_run_the_patched_invalidate(spark):
     assert spark.sparkContext.getConf().get("spark.python.daemon.module") == DAEMON_MODULE
 
@@ -126,12 +146,35 @@ def _without_repo(env: dict[str, str]) -> dict[str, str]:
 
 
 def test_probe_finds_the_module_only_where_a_worker_would(tmp_path, monkeypatch):
-    assert daemon_module_found(REPO)
+    py = sys.executable
+    assert daemon_module_found(py, REPO)
     monkeypatch.setenv("PYTHONPATH", _without_repo(dict(os.environ))["PYTHONPATH"])
-    assert daemon_module_found(REPO)  # found through the working directory
-    assert not daemon_module_found(str(tmp_path))
+    assert daemon_module_found(py, REPO)  # found through the working directory
+    assert not daemon_module_found(py, str(tmp_path))
+    assert not daemon_module_found(str(tmp_path / "no-python"), REPO)
     monkeypatch.setenv("PYTHONPATH", REPO)
-    assert daemon_module_found(str(tmp_path))
+    assert daemon_module_found(py, str(tmp_path))
+
+
+def test_probe_covers_every_worker_interpreter(monkeypatch):
+    from pyspark import SparkConf
+
+    monkeypatch.setenv("PYSPARK_PYTHON", "py-rdd")
+    assert worker_pythons(SparkConf(loadDefaults=False)) == {"py-rdd"}
+    conf = SparkConf(loadDefaults=False).set("spark.pyspark.python", "py-core")
+    assert worker_pythons(conf) == {"py-rdd", "py-core"}
+    conf.set("spark.sql.execution.pyspark.python", "py-sql")
+    assert worker_pythons(conf) == {"py-rdd", "py-sql"}
+    monkeypatch.delenv("PYSPARK_PYTHON")
+    assert worker_pythons(SparkConf(loadDefaults=False)) == {"python3"}
+
+
+def test_only_local_masters_get_the_daemon():
+    assert LOCAL_MASTER.fullmatch("local") and LOCAL_MASTER.fullmatch("local[*]")
+    assert LOCAL_MASTER.fullmatch("local[4, 2]")
+    assert not LOCAL_MASTER.fullmatch("local-cluster[2, 1, 1024]")
+    assert not LOCAL_MASTER.fullmatch("spark://host:7077")
+    assert not LOCAL_MASTER.fullmatch("yarn")
 
 
 #: Run where a worker cannot find the package: the child imports it from
